@@ -86,7 +86,8 @@ def connected_components(
     """Connected components over an undirected edge list: returns
     ``(node, component)`` for every node incident to an edge, where
     ``component`` is the minimum node id in the component. Isolated nodes
-    (no edges) are absent — callers union them back as singletons.
+    (no edges) are absent — :func:`label_components` adds them back as
+    singletons.
 
     Alternates large-star/small-star until the edge set reaches its
     fixpoint (a star forest: every node points at its component min).
@@ -104,7 +105,7 @@ def connected_components(
     replacing the count job + exceptAll job (exceptAll alone shuffled both
     sides). Same fixpoint condition, exactly (set equality either way).
     Measured on the l2g pair graph: CC stage 1.57× sf0.1 / see
-    OPTIMIZATION_r16.md for tiers (tools/ab_r16.py cc)."""
+    OPTIMIZATION_r16.md for tiers (re-run with tools/perf.py ab)."""
     adj = _canonical(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     ).localCheckpoint()
@@ -140,6 +141,24 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
     return members.union(roots)
+
+
+def label_components(
+    nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """``(id_col, cluster_id)`` for EVERY row of ``nodes``: the star loop
+    over ``edges`` (its first two columns are the endpoints), then one left
+    join from ``nodes`` so singletons — absent from the loop — label
+    themselves. ``cluster_id`` is the component's minimum node id."""
+    comp = connected_components(edges, src=edges.columns[0], dst=edges.columns[1])
+    return (
+        nodes.select(F.col(id_col).alias("node"))
+        .join(comp, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.coalesce("component", F.col("node")).alias("cluster_id"),
+        )
+    )
 
 
 _L2H_SQL = f"""
@@ -188,15 +207,7 @@ def l2h_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalakejson_spark.functions.dedup import l2g_verified_neardup_pairs
 
     pairs = l2g_verified_neardup_pairs(spark, sf_dir)
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    assigned = (
-        docs.select("doc_id")
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("cluster_id"),
-        )
-    )
+    assigned = label_components(docs.select("doc_id"), pairs)
     from pyspark.sql import Window
 
     size_w = Window.partitionBy("cluster_id")

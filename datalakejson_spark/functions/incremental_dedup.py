@@ -25,10 +25,12 @@ over document *content* instead of file paths.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import re
 import shutil
+import time
 import uuid
 
 import pyspark.sql.functions as F
@@ -313,8 +315,6 @@ def _publish_staged(
     Local-filesystem rename, like the archive move (plans/ingest.py:313);
     on an object store the same contract is a staged prefix + manifest.
     """
-    import json
-    import time
 
     staging_root = os.path.join(index_dir, _STAGING)
     outcomes: dict[str, str] = {}
@@ -346,8 +346,6 @@ def _write_lost_tombstone(
     publish-race loser — ``_staging/_LOST_<token>.json`` with a timestamp
     and the vanished snapshot files. Advisory observability only (the live
     index is the winner's complete layout); best-effort by design."""
-    import json
-    import time
 
     try:
         path = os.path.join(index_dir, _STAGING, f"_LOST_{token}.json")
@@ -370,137 +368,134 @@ def _write_lost_tombstone(
 def _publish_one_stage(index_dir: str, stage: str, stale_stage_s: float) -> str:
     """Roll one stage forward; returns "published", "lost" (discarded as a
     publish-race loser), or "pending" (uncommitted, left alone/swept)."""
-    import json
-    import time
 
-    if True:  # hold the original loop body's indentation (diff-minimal)
-        if not os.path.exists(os.path.join(stage, "_COMMITTED")):
-            if os.path.exists(
-                os.path.join(stage, _REBUILD_META)
-            ) or os.path.exists(os.path.join(stage, _MAJOR_META)):
-                # A resumable rebuild/major-compaction checkpoint: a
-                # multi-hour subdir write has no heartbeat that
-                # distinguishes it from a crash, so the age sweep must
-                # never reclaim it — only the owning admin verb adopts or
-                # resets this stage.
-                return "pending"
-            # age on the NEWEST mtime in the tree (a live stager's deep
-            # writes keep it fresh) and reclaim by atomic rename-then-
-            # recheck — a commit racing the sweep is either restored whole
-            # or fails loudly ENOENT, never half-swept (round 15)
-            if time.time() - stage_newest_mtime(stage) >= stale_stage_s:
-                _sweep_stale_stage(stage)
+    if not os.path.exists(os.path.join(stage, "_COMMITTED")):
+        if os.path.exists(
+            os.path.join(stage, _REBUILD_META)
+        ) or os.path.exists(os.path.join(stage, _MAJOR_META)):
+            # A resumable rebuild/major-compaction checkpoint: a
+            # multi-hour subdir write has no heartbeat that
+            # distinguishes it from a crash, so the age sweep must
+            # never reclaim it — only the owning admin verb adopts or
+            # resets this stage.
             return "pending"
-        manifest = os.path.join(stage, "_SUBSUMED.json")
-        subsumed: dict[str, list[str]] = {}
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                subsumed = json.load(fh)
-        # Publish-race loser detection (round 12): a maintenance stage
-        # (compaction/rebuild — anything with a _SUBSUMED manifest) is
-        # valid only against the live-file SNAPSHOT it read. If another
-        # runner's maintenance already subsumed any of those files, this
-        # stage LOST the race: its outputs would duplicate rows the winner
-        # already rewrote, so it is discarded whole (correct either way —
-        # the winner's layout is complete). The check runs only BEFORE
-        # this stage's own deletes begin: the _PUBLISHING marker is
-        # dropped at the point of no return, and a replay that finds it
-        # always rolls FORWARD (missing subsumed files are then this
-        # stage's own completed deletes, not a lost race).
-        publishing = os.path.join(stage, "_PUBLISHING")
-        if subsumed and not os.path.exists(publishing):
-            missing = [
-                f"{sub}/{name}"
-                for sub, names in subsumed.items()
-                for name in names
-                if not os.path.exists(os.path.join(index_dir, sub, name))
-            ]
-            if missing:
-                # Discarding must never be SILENT (ADVICE r12): the
-                # in-process rebuild_index verifies its own outcome, but a
-                # rebuild that CRASHED after _COMMITTED and is discarded
-                # here by a LATER entry point would otherwise throw away
-                # hours of work with no operator signal. Warn always and
-                # leave a tombstone for a rebuild stage (a plain file in
-                # the staging root — the publish loop only walks dirs).
-                token = os.path.basename(stage)
-                _LOG.warning(
-                    "discarding committed maintenance stage %s under %s as a "
-                    "publish-race loser (%d subsumed-snapshot files already "
-                    "gone, e.g. %s) — the concurrent winner's layout is live",
-                    token, index_dir, len(missing), missing[0],
-                )
-                if token in (_REBUILD_STAGE, _MAJOR_STAGE):
-                    _write_lost_tombstone(index_dir, token, missing)
-                shutil.rmtree(stage, ignore_errors=True)
-                return "lost"
-            with open(publishing, "w") as fh:
-                fh.write("ok")
-        fire("dedup:publish_publishing")  # marked: replay must roll forward
-        sidecar_adds: dict[str, dict] = {}
-        for sub in _INDEX_SUBDIRS:
-            src_dir, dst_dir = os.path.join(stage, sub), os.path.join(index_dir, sub)
-            os.makedirs(dst_dir, exist_ok=True)
-            adds = sidecar_adds.setdefault(sub, {})
-            if os.path.isdir(src_dir):
-                for name in os.listdir(src_dir):
-                    if not name.endswith(".parquet"):
-                        continue
-                    dst = os.path.join(dst_dir, name)
-                    if not os.path.exists(dst):  # idempotent re-publish
-                        # Warm the stats sidecar from the STAGED file's
-                        # footer before the move: just-written and
-                        # page-hot locally, and on an object store this
-                        # turns N per-probe footer GETs after a
-                        # compaction into zero (the self-heal in
-                        # _file_stats remains the fallback). Advisory —
-                        # a failed read just means lazy healing later.
-                        try:
-                            rng, rows = _footer_stats(
-                                os.path.join(src_dir, name), _PRUNE_KEY[sub]
-                            )
-                            adds[name] = _encode_sidecar_entry(rng, rows)
-                        except Exception:  # noqa: BLE001
-                            pass
-                        try:
-                            os.replace(os.path.join(src_dir, name), dst)
-                        except FileNotFoundError:
-                            # two runners publishing the SAME stage: the
-                            # other one moved this file between our
-                            # exists() check and the replace — done is
-                            # done, as long as the file really is live
-                            if not os.path.exists(dst):
-                                raise
-                            adds.pop(name, None)
-        for sub, names in subsumed.items():
-            live = os.path.join(index_dir, sub)
-            for name in names:
-                try:
-                    os.remove(os.path.join(live, name))
-                except FileNotFoundError:  # idempotent re-delete
-                    pass
-        for sub in _INDEX_SUBDIRS:
-            if sidecar_adds.get(sub) or subsumed.get(sub):
-                _merge_sidecar_cache(
-                    os.path.join(index_dir, sub),
-                    sidecar_adds.get(sub, {}),
-                    subsumed.get(sub, []),
-                )
-        # A REBUILD stage (rebuild_index) carries the new lane-definition
-        # marker; it replaces the live one only after the new files are in
-        # and the subsumed old-definition files are gone, so the marker
-        # flip is the last act of the publish. Crash before it: the stage
-        # is still committed and the next _publish_staged — which every
-        # entry point runs BEFORE _check_lane_meta — finishes the flip, so
-        # the guard never fires on a half-rebuilt index.
-        staged_lanes = os.path.join(stage, _LANES_META)
-        if os.path.exists(staged_lanes):
+        # age on the NEWEST mtime in the tree (a live stager's deep
+        # writes keep it fresh) and reclaim by atomic rename-then-
+        # recheck — a commit racing the sweep is either restored whole
+        # or fails loudly ENOENT, never half-swept (round 15)
+        if time.time() - stage_newest_mtime(stage) >= stale_stage_s:
+            _sweep_stale_stage(stage)
+        return "pending"
+    manifest = os.path.join(stage, "_SUBSUMED.json")
+    subsumed: dict[str, list[str]] = {}
+    if os.path.exists(manifest):
+        with open(manifest) as fh:
+            subsumed = json.load(fh)
+    # Publish-race loser detection (round 12): a maintenance stage
+    # (compaction/rebuild — anything with a _SUBSUMED manifest) is
+    # valid only against the live-file SNAPSHOT it read. If another
+    # runner's maintenance already subsumed any of those files, this
+    # stage LOST the race: its outputs would duplicate rows the winner
+    # already rewrote, so it is discarded whole (correct either way —
+    # the winner's layout is complete). The check runs only BEFORE
+    # this stage's own deletes begin: the _PUBLISHING marker is
+    # dropped at the point of no return, and a replay that finds it
+    # always rolls FORWARD (missing subsumed files are then this
+    # stage's own completed deletes, not a lost race).
+    publishing = os.path.join(stage, "_PUBLISHING")
+    if subsumed and not os.path.exists(publishing):
+        missing = [
+            f"{sub}/{name}"
+            for sub, names in subsumed.items()
+            for name in names
+            if not os.path.exists(os.path.join(index_dir, sub, name))
+        ]
+        if missing:
+            # Discarding must never be SILENT (ADVICE r12): the
+            # in-process rebuild_index verifies its own outcome, but a
+            # rebuild that CRASHED after _COMMITTED and is discarded
+            # here by a LATER entry point would otherwise throw away
+            # hours of work with no operator signal. Warn always and
+            # leave a tombstone for a rebuild stage (a plain file in
+            # the staging root — the publish loop only walks dirs).
+            token = os.path.basename(stage)
+            _LOG.warning(
+                "discarding committed maintenance stage %s under %s as a "
+                "publish-race loser (%d subsumed-snapshot files already "
+                "gone, e.g. %s) — the concurrent winner's layout is live",
+                token, index_dir, len(missing), missing[0],
+            )
+            if token in (_REBUILD_STAGE, _MAJOR_STAGE):
+                _write_lost_tombstone(index_dir, token, missing)
+            shutil.rmtree(stage, ignore_errors=True)
+            return "lost"
+        with open(publishing, "w") as fh:
+            fh.write("ok")
+    fire("dedup:publish_publishing")  # marked: replay must roll forward
+    sidecar_adds: dict[str, dict] = {}
+    for sub in _INDEX_SUBDIRS:
+        src_dir, dst_dir = os.path.join(stage, sub), os.path.join(index_dir, sub)
+        os.makedirs(dst_dir, exist_ok=True)
+        adds = sidecar_adds.setdefault(sub, {})
+        if os.path.isdir(src_dir):
+            for name in os.listdir(src_dir):
+                if not name.endswith(".parquet"):
+                    continue
+                dst = os.path.join(dst_dir, name)
+                if not os.path.exists(dst):  # idempotent re-publish
+                    # Warm the stats sidecar from the STAGED file's
+                    # footer before the move: just-written and
+                    # page-hot locally, and on an object store this
+                    # turns N per-probe footer GETs after a
+                    # compaction into zero (the self-heal in
+                    # _file_stats remains the fallback). Advisory —
+                    # a failed read just means lazy healing later.
+                    try:
+                        rng, rows = _footer_stats(
+                            os.path.join(src_dir, name), _PRUNE_KEY[sub]
+                        )
+                        adds[name] = _encode_sidecar_entry(rng, rows)
+                    except Exception:  # noqa: BLE001
+                        pass
+                    try:
+                        os.replace(os.path.join(src_dir, name), dst)
+                    except FileNotFoundError:
+                        # two runners publishing the SAME stage: the
+                        # other one moved this file between our
+                        # exists() check and the replace — done is
+                        # done, as long as the file really is live
+                        if not os.path.exists(dst):
+                            raise
+                        adds.pop(name, None)
+    for sub, names in subsumed.items():
+        live = os.path.join(index_dir, sub)
+        for name in names:
             try:
-                os.replace(staged_lanes, os.path.join(index_dir, _LANES_META))
-            except FileNotFoundError:  # same-stage race: the other runner
-                pass                   # flipped the marker already
-        shutil.rmtree(stage, ignore_errors=True)
-        return "published"
+                os.remove(os.path.join(live, name))
+            except FileNotFoundError:  # idempotent re-delete
+                pass
+    for sub in _INDEX_SUBDIRS:
+        if sidecar_adds.get(sub) or subsumed.get(sub):
+            _merge_sidecar_cache(
+                os.path.join(index_dir, sub),
+                sidecar_adds.get(sub, {}),
+                subsumed.get(sub, []),
+            )
+    # A REBUILD stage (rebuild_index) carries the new lane-definition
+    # marker; it replaces the live one only after the new files are in
+    # and the subsumed old-definition files are gone, so the marker
+    # flip is the last act of the publish. Crash before it: the stage
+    # is still committed and the next _publish_staged — which every
+    # entry point runs BEFORE _check_lane_meta — finishes the flip, so
+    # the guard never fires on a half-rebuilt index.
+    staged_lanes = os.path.join(stage, _LANES_META)
+    if os.path.exists(staged_lanes):
+        try:
+            os.replace(staged_lanes, os.path.join(index_dir, _LANES_META))
+        except FileNotFoundError:  # same-stage race: the other runner
+            pass                   # flipped the marker already
+    shutil.rmtree(stage, ignore_errors=True)
+    return "published"
 
 
 # -- per-file key-range sidecars (round 11) --------------------------------
@@ -601,7 +596,6 @@ def _sidecar_paths(live_dir: str) -> list[str]:
 def _load_one_sidecar(path: str, mtime_ns: int, size: int) -> dict:
     """One sidecar FILE, parse-cached by the (mtime, size) the caller just
     stat'ed. Unreadable/odd content degrades to empty (advisory)."""
-    import json
 
     hit = _SIDECAR_PARSE_CACHE.get(path)
     if hit is not None and hit[0] == mtime_ns and hit[1] == size:
@@ -647,7 +641,6 @@ def _write_sidecar_file(live_dir: str, name: str, data: dict) -> None:
     concurrent writers sharing one tmp name could replace a half-written
     file into place; last-writer-wins on the file itself is fine —
     advisory cache). An EMPTY shard is removed rather than written."""
-    import json
 
     path = os.path.join(live_dir, name)
     if not data:
@@ -736,8 +729,6 @@ def _merge_sidecar_cache(live_dir: str, add: dict, remove: list[str]) -> None:
     except OSError:
         pass
     try:  # sweep tmps orphaned by hard crashes (age-guarded like stages)
-        import time
-
         for n in os.listdir(live_dir):
             if n.startswith(_RANGES + ".") and n.endswith(".tmp"):
                 p = os.path.join(live_dir, n)
@@ -834,7 +825,6 @@ def _file_stats(
     stats-repaired); a footer READ ERROR maps to ``(None, None)`` and is
     NOT cached (transient). Legacy 2-element ``[lo, hi]`` entries
     (pre-rows cache) are treated as unknown and re-read once."""
-    import json
 
     cache = _load_sidecar_shared(live_dir)  # read-only; never mutated here
     files = _live_files(live_dir)
@@ -1251,7 +1241,6 @@ def compact_index(
     run it from ONE maintenance runner by preference: a lost race is
     wasted work, never corruption.
     """
-    import json
     import math
 
     _publish_staged(index_dir)  # complete any predecessor first
@@ -1532,7 +1521,6 @@ def write_lane_meta(index_dir: str, force: bool = False) -> None:
     idempotent. ``force=True`` is for the rebuild path, where the files
     themselves are being rewritten under the current definition
     (:func:`rebuild_index`)."""
-    import json
 
     os.makedirs(index_dir, exist_ok=True)
     meta_path = os.path.join(index_dir, _LANES_META)
@@ -1567,7 +1555,6 @@ def _check_lane_meta(index_dir: str) -> None:
     lane width — silently adopting would be exactly the blind spot this
     guard exists to prevent (the 16→32-bit widening shipped in the same
     change as the marker, so every pre-widening index is marker-less)."""
-    import json
 
     current = _current_lane_meta()
     meta_path = os.path.join(index_dir, _LANES_META)
@@ -1658,7 +1645,6 @@ def rebuild_index(
     so the ``_RANGES.json`` pruning is armed from the first post-rebuild
     audit.
     """
-    import json
     import math
 
     stage = os.path.join(index_dir, _STAGING, _REBUILD_STAGE)
@@ -2356,8 +2342,6 @@ def _record_fold_history(
     the fold did. Best-effort observability (O_APPEND single write; a torn
     tail line is skipped by the reader) — the trigger needs a few recent
     records, never a consistent full log."""
-    import json
-    import time
 
     try:
         rec: dict = {"ts": time.time(), "max_runs": max_runs,
@@ -2375,8 +2359,6 @@ def _record_fold_history(
 
 
 def _read_fold_history(index_dir: str) -> list[dict]:
-    import json
-
     out: list[dict] = []
     try:
         with open(os.path.join(index_dir, _FOLD_HISTORY)) as fh:
@@ -2445,7 +2427,6 @@ def major_compact_index(
     in ``_SUBSUMED``) — the major merge and the ingest loop compose. The
     publish is verified like rebuild's: losing a concurrent maintenance
     race RAISES instead of silently discarding hours of work."""
-    import json
     import math
 
     stage = os.path.join(index_dir, _STAGING, _MAJOR_STAGE)

@@ -501,3 +501,40 @@ def j10_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", "ts", "last_click_ts")
     )
+
+
+@register(
+    "j5b_full_outer_join",
+    survey="J5,F7",
+    extended=True,  # J5 covered in the driver tier by j5
+    sql="""
+    SELECT coalesce(cn.nationkey, sn.nationkey) AS nationkey,
+           coalesce(cn.n_customers, 0) AS n_customers,
+           coalesce(sn.n_suppliers, 0) AS n_suppliers
+    FROM (SELECT CAST(c_nationkey AS INTEGER) AS nationkey, count(*) AS n_customers
+          FROM customer GROUP BY 1) cn
+    FULL OUTER JOIN
+         (SELECT CAST(s_nationkey AS INTEGER) AS nationkey, count(*) AS n_suppliers
+          FROM supplier GROUP BY 1) sn
+      ON cn.nationkey = sn.nationkey
+    """,
+)
+def j5b_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FULL OUTER (SQL surface, diagram_1.txt:99): customer vs supplier
+    presence per nation, either side may be missing."""
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    cn = customer.groupBy(
+        F.col("c_nationkey").cast("int").alias("nationkey")
+    ).agg(F.count("*").alias("n_customers"))
+    sn = supplier.groupBy(
+        F.col("s_nationkey").cast("int").alias("nationkey")
+    ).agg(F.count("*").alias("n_suppliers"))
+    return (
+        cn.join(sn, "nationkey", "full_outer")
+        .select(
+            "nationkey",
+            F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
+            F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
+        )
+    )

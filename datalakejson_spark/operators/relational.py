@@ -417,3 +417,113 @@ def u3_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
         "membership", F.lit("customer_only")
     )
     return both.unionByName(only)
+
+
+@register(
+    "o2_global_sort_rank",
+    survey="O2,W1",
+    extended=True,  # O2 covered in the driver tier by g3_flagship
+    sql="""
+    SELECT rank_overall, s_suppkey, s_name, s_acctbal FROM (
+        SELECT row_number() OVER (ORDER BY s_acctbal DESC, s_suppkey) AS rank_overall,
+               s_suppkey, s_name, s_acctbal
+        FROM supplier
+    )
+    """,
+)
+def o2_global_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global total order made value-visible via a rank column (a bare ORDER
+    BY is invisible to an order-insensitive compare). Spark executes a
+    range-partitioned sort; the empty-frame window collapses to one
+    partition — acceptable for dimension-sized inputs only."""
+    from pyspark.sql import Window
+
+    supplier = load_table(spark, sf_dir, "supplier")
+    w = Window.orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey"))
+    return supplier.select(
+        F.row_number().over(w).alias("rank_overall"),
+        "s_suppkey",
+        "s_name",
+        "s_acctbal",
+    )
+
+
+@register(
+    "u2b_union_all",
+    survey="U2",
+    extended=True,  # U2 covered in the driver tier by u2
+    sql="""
+    SELECT kind, count(*) AS n FROM (
+        SELECT 'c' AS kind, CAST(c_nationkey AS INTEGER) AS nationkey FROM customer
+        UNION ALL
+        SELECT 's' AS kind, CAST(s_nationkey AS INTEGER) AS nationkey FROM supplier
+    )
+    GROUP BY 1
+    """,
+)
+def u2b_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNION ALL (bag semantics) vs U2's UNION (set semantics)."""
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    u = customer.select(
+        F.lit("c").alias("kind"), F.col("c_nationkey").cast("int").alias("nationkey")
+    ).union(
+        supplier.select(
+            F.lit("s").alias("kind"), F.col("s_nationkey").cast("int").alias("nationkey")
+        )
+    )
+    return u.groupBy("kind").agg(F.count("*").alias("n"))
+
+
+@register(
+    "p13_like_predicates",
+    survey="P10,F2",
+    extended=True,  # P10/F2 covered in the driver tier
+    sql="""
+    SELECT p_partkey, p_name, p_type
+    FROM part
+    WHERE p_type LIKE 'SMALL%'
+      AND p_name NOT LIKE '%grey%'
+      AND lower(p_brand) LIKE 'brand#1_'
+    """,
+)
+def p13_like_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LIKE / NOT LIKE / single-char wildcard predicates (pushed to the scan
+    as StringStartsWith/StringContains where the pattern allows)."""
+    part = load_table(spark, sf_dir, "part")
+    return part.filter(
+        F.col("p_type").like("SMALL%")
+        & ~F.col("p_name").like("%grey%")
+        & F.lower("p_brand").like("brand#1_")
+    ).select("p_partkey", "p_name", "p_type")
+
+
+# --------------------------------------------------------------------------
+# U4: EXCEPT ALL / INTERSECT ALL (multiplicity-preserving set ops)
+# --------------------------------------------------------------------------
+_U4_SQL = """
+    WITH a AS (SELECT event_type, user_id % 10 AS bucket FROM events
+               WHERE event_id <= 6000),
+         b AS (SELECT event_type, user_id % 10 AS bucket FROM events
+               WHERE event_id > 4000)
+    SELECT event_type, bucket, count(*) AS n FROM (
+        SELECT * FROM a EXCEPT ALL SELECT * FROM b
+    ) GROUP BY 1, 2
+"""
+
+
+@register("u4_except_intersect_all", survey="U3,G3", extended=True, sql=_U4_SQL)
+def u4_except_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multiplicity-preserving set difference (``EXCEPT ALL`` /
+    ``exceptAll``): each duplicate survives max(n_a - n_b, 0) times — the
+    bag semantics U3's DISTINCT variants erase. Planned as one aggregate
+    over a union with signed counts (no join), which is exactly how you'd
+    hand-write it at scale; the overlapping event_id slices make both
+    multiplicity directions non-trivial."""
+    events = load_table(spark, sf_dir, "events")
+    bucket = (F.col("user_id") % 10).alias("bucket")
+    a = events.filter(F.col("event_id") <= 6000).select("event_type", bucket)
+    b = events.filter(F.col("event_id") > 4000).select("event_type", bucket)
+    return a.exceptAll(b).groupBy("event_type", "bucket").agg(
+        F.count("*").alias("n")
+    )

@@ -152,6 +152,33 @@ def g9_pivot_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return renamed
 
 
+@register(
+    "g9b_unpivot",
+    survey="G3,G6,U2",
+    extended=True,  # G3/G6/U2 covered in the driver tier
+    sql="""
+    SELECT c_custkey, metric, val FROM (
+        SELECT c_custkey, 'acctbal' AS metric, c_acctbal AS val FROM customer
+        UNION ALL
+        SELECT c_custkey, 'nationkey' AS metric, CAST(c_nationkey AS DOUBLE) AS val
+        FROM customer
+    )
+    WHERE c_custkey <= 200
+    """,
+)
+def g9b_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unpivot/melt wide→long via Spark's unpivot API (plans the same
+    Expand the oracle's UNION ALL spells out — one scan, not one per
+    metric)."""
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
+    return (
+        cust.withColumn("nationkey_d", F.col("c_nationkey").cast("double"))
+        .withColumnRenamed("c_acctbal", "acctbal")
+        .withColumnRenamed("nationkey_d", "nationkey")
+        .unpivot("c_custkey", ["acctbal", "nationkey"], "metric", "val")
+    )
+
+
 # --------------------------------------------------------------------------
 # G6c: explicit GROUPING SETS + grouping_id
 # --------------------------------------------------------------------------

@@ -346,3 +346,242 @@ def w1b_distributed_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rn").alias("drnk"),
         exact_ntile(F.col("rn"), F.col("_part_total"), 4).alias("quartile"),
     )
+
+
+@register(
+    "w6_distribution_functions",
+    survey="W1,W2",
+    extended=True,  # W1/W2 covered in the driver tier by w1/o1/j10
+    sql="""
+    SELECT s_suppkey, s_acctbal,
+           round(percent_rank() OVER w, 9) AS pct_rank,
+           round(cume_dist() OVER w, 9) AS cume,
+           nth_value(s_suppkey, 2) OVER (PARTITION BY CAST(s_nationkey AS INTEGER) % 5
+                                         ORDER BY s_acctbal DESC, s_suppkey
+                                         ROWS BETWEEN UNBOUNDED PRECEDING
+                                                  AND UNBOUNDED FOLLOWING)
+               AS second_richest
+    FROM supplier
+    WINDOW w AS (PARTITION BY CAST(s_nationkey AS INTEGER) % 5
+                 ORDER BY s_acctbal DESC, s_suppkey)
+    """,
+)
+def w6_distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """percent_rank / cume_dist / nth_value. Ratios rounded to 9 dp: they're
+    exact binary fractions only when group sizes are powers of two."""
+    supplier = load_table(spark, sf_dir, "supplier")
+    grp = (F.col("s_nationkey").cast("int") % 5).alias("g")
+    w = Window.partitionBy(grp).orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey"))
+    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return supplier.select(
+        "s_suppkey",
+        "s_acctbal",
+        F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
+        F.round(F.cume_dist().over(w), 9).alias("cume"),
+        F.nth_value("s_suppkey", 2).over(w_full).alias("second_richest"),
+    )
+
+
+# --------------------------------------------------------------------------
+# W7: time-series resample + forward fill (gap fill)
+# --------------------------------------------------------------------------
+_W7_SQL = """
+    WITH b AS (
+        SELECT user_id, date_trunc('hour', ts) AS h, max(value) AS v
+        FROM events WHERE user_id <= 20 GROUP BY 1, 2
+    ),
+    bounds AS (SELECT user_id, min(h) AS mn, max(h) AS mx FROM b GROUP BY 1),
+    grid AS (
+        SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS h
+        FROM bounds
+    ),
+    j AS (SELECT g.user_id, g.h, b.v FROM grid g LEFT JOIN b USING (user_id, h))
+    SELECT user_id, h, v,
+           last_value(v IGNORE NULLS)
+               OVER (PARTITION BY user_id ORDER BY h
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS v_ffill
+    FROM j
+"""
+
+
+@register("w7_resample_gapfill", survey="W2,F1,F5", extended=True, sql=_W7_SQL)
+def w7_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regular-grid resampling with forward fill — the time-series gap-fill
+    shape (sensor/feature pipelines: downsample to hourly, carry the last
+    observation through gaps). Spark-first formulation: per-user hourly
+    aggregate, grid densification via ``sequence`` + ``explode`` (map-side —
+    the grid never shuffles unjoined), one left join back, then
+    ``last(v, ignoreNulls)`` over an unbounded-preceding window. Shuffles:
+    one for the aggregate, one for the join+window on the same key. ``max``
+    (not sum) keeps doubles bit-stable cross-engine."""
+    events = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
+    b = events.groupBy(
+        "user_id", F.date_trunc("hour", "ts").alias("h")
+    ).agg(F.max("value").alias("v"))
+    bounds = b.groupBy("user_id").agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    grid = bounds.select(
+        "user_id",
+        F.explode(
+            F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))
+        ).alias("h"),
+    )
+    j = grid.join(b, ["user_id", "h"], "left")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("h")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return j.select(
+        "user_id",
+        "h",
+        "v",
+        F.last("v", ignorenulls=True).over(w).alias("v_ffill"),
+    )
+
+
+# --------------------------------------------------------------------------
+# W7b: linear interpolation across gaps (the ffill upgrade)
+# --------------------------------------------------------------------------
+_W7B_SQL = """
+    WITH b AS (
+        SELECT user_id, date_trunc('hour', ts) AS h, max(value) AS v
+        FROM events WHERE user_id <= 20 GROUP BY 1, 2
+    ),
+    bounds AS (SELECT user_id, min(h) AS mn, max(h) AS mx FROM b GROUP BY 1),
+    grid AS (
+        SELECT user_id, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS h
+        FROM bounds
+    ),
+    j AS (SELECT g.user_id, g.h, b.v FROM grid g LEFT JOIN b USING (user_id, h)),
+    ctx AS (
+        SELECT user_id, h, v,
+               last_value(v IGNORE NULLS) OVER wp AS pv,
+               max(CASE WHEN v IS NOT NULL THEN h END) OVER wp AS ph,
+               first_value(v IGNORE NULLS) OVER wf AS nv,
+               min(CASE WHEN v IS NOT NULL THEN h END) OVER wf AS nh
+        FROM j
+        WINDOW wp AS (PARTITION BY user_id ORDER BY h
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+               wf AS (PARTITION BY user_id ORDER BY h
+                      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    )
+    SELECT user_id, h,
+           round(CASE
+               WHEN v IS NOT NULL THEN v
+               WHEN pv IS NULL THEN nv
+               WHEN nv IS NULL THEN pv
+               ELSE pv + (nv - pv)
+                    * (epoch(h) - epoch(ph)) / (epoch(nh) - epoch(ph))
+           END, 9) AS v_interp
+    FROM ctx
+"""
+
+
+@register("w7b_linear_interpolation", survey="W2,W4,F1", extended=True, sql=_W7B_SQL)
+def w7b_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Linear interpolation over the resampled grid: each gap point blends
+    the straddling observations by time distance (edges fall back to the one
+    available side). Two windows over ONE shuffle on user_id — forward and
+    backward context come from mirrored frames of the same partitioning, so
+    interpolation costs the same shuffle count as forward fill. Rounded to
+    9 decimals for cross-engine float parity (w6 precedent)."""
+    events = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
+    b = events.groupBy(
+        "user_id", F.date_trunc("hour", "ts").alias("h")
+    ).agg(F.max("value").alias("v"))
+    bounds = b.groupBy("user_id").agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    grid = bounds.select(
+        "user_id",
+        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))).alias("h"),
+    )
+    j = grid.join(b, ["user_id", "h"], "left")
+    wp = (
+        Window.partitionBy("user_id")
+        .orderBy("h")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wf = (
+        Window.partitionBy("user_id")
+        .orderBy("h")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    obs_h = F.when(F.col("v").isNotNull(), F.col("h"))
+    pv, ph = F.last("v", ignorenulls=True).over(wp), F.max(obs_h).over(wp)
+    nv, nh = F.first("v", ignorenulls=True).over(wf), F.min(obs_h).over(wf)
+    ctx = j.select("user_id", "h", "v",
+                   pv.alias("pv"), ph.alias("ph"), nv.alias("nv"), nh.alias("nh"))
+    ep = F.unix_timestamp
+    interp = (
+        F.when(F.col("v").isNotNull(), F.col("v"))
+        .when(F.col("pv").isNull(), F.col("nv"))
+        .when(F.col("nv").isNull(), F.col("pv"))
+        .otherwise(
+            F.col("pv")
+            + (F.col("nv") - F.col("pv"))
+            * (ep("h") - ep("ph"))
+            / (ep("nh") - ep("ph"))
+        )
+    )
+    return ctx.select("user_id", "h", F.round(interp, 9).alias("v_interp"))
+
+
+# --------------------------------------------------------------------------
+# W8: batch sessionization (gap-based session assignment)
+# --------------------------------------------------------------------------
+_W8_SQL = """
+    WITH o AS (
+        SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
+        FROM events
+    ),
+    flagged AS (
+        SELECT user_id, event_id, ts,
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR epoch(ts) - epoch(lag(ts) OVER w) > 1800.0
+                    THEN 1 ELSE 0 END AS new_s
+        FROM o
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    sess AS (
+        SELECT user_id, ts,
+               SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                         AND CURRENT ROW) AS session_n
+        FROM flagged
+    )
+    SELECT user_id, CAST(session_n AS BIGINT) AS session_n,
+           count(*) AS n_events, min(ts) AS start_ts, max(ts) AS end_ts
+    FROM sess
+    GROUP BY 1, 2
+"""
+
+
+@register("w8_sessionization", survey="W2,W3,G3,T6", extended=True, sql=_W8_SQL)
+def w8_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch sessionization — the gap rule (>30 min silence starts a new
+    session) as lag + running sum over ONE shuffle on user_id, then the
+    per-session rollup reuses the same partitioning. This is the batch twin
+    of the streaming session window (T6): identical session boundaries,
+    derivable over the whole history instead of a stream. Gap compare uses
+    the microsecond-precision epoch double in both engines (Spark
+    ``unix_timestamp`` would truncate sub-second digits and disagree with
+    DuckDB's ``epoch()`` on boundary gaps)."""
+    from datalakejson_spark.sources.tables import load_table as _lt
+
+    events = _lt(spark, sf_dir, "events").select(
+        "user_id", "event_id", F.date_trunc("microsecond", "ts").alias("ts")
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w)
+    new_s = F.when(gap.isNull() | (gap > 1800.0), 1).otherwise(0)
+    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    sess = events.withColumn("new_s", new_s).withColumn(
+        "session_n", F.sum("new_s").over(run)
+    )
+    return sess.groupBy("user_id", "session_n").agg(
+        F.count("*").alias("n_events"),
+        F.min("ts").alias("start_ts"),
+        F.max("ts").alias("end_ts"),
+    )

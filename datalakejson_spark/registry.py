@@ -62,7 +62,7 @@ def register(
     from the driver's registry, which checks only the first 50 entries
     alphabetically. The driver tier (``driver_specs()``) is a curated ≤50-query
     set in which every SURVEY §2 operator family appears at least once; the
-    extended tier holds the redundant variants (TPC-H showcase queries,
+    extended tier holds the redundant variants (TPC-H shapes,
     per-function long-tail demos) whose §2 tags are already covered."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -93,17 +93,8 @@ def all_specs() -> dict[str, QuerySpec]:
         windows,
         scalar_functions,
         subqueries,
-        coverage_extra,
-        coverage_extra2,
         statistics,
-        showcase,
-        showcase2,
-        showcase3,
-        showcase4,
-        windows_extra,
-        json_extra,
-        strings_extra,
-        math_extra,
+        tpch,
     )
     from datalakejson_spark.functions import (  # noqa: F401
         clusters,
@@ -111,7 +102,6 @@ def all_specs() -> dict[str, QuerySpec]:
         dedup,
         similarity,
         text,
-        text_extra,
         incremental_dedup,
         ivf,
         llm_pipeline,

@@ -70,3 +70,17 @@ def test_extended_queries_stay_registered():
         "l4_language_profile",
     ):
         assert name in specs and specs[name].extended, name
+
+
+def test_queries_live_in_family_modules():
+    # layout pin: a query lives in the module named for its operator family
+    # (relational, joins, windows, tpch, text, ...), never in a module named
+    # for the round or sweep that added it
+    import re
+
+    stray = sorted(
+        f"{name} ({spec.fn.__module__})"
+        for name, spec in all_specs().items()
+        if re.fullmatch(r"showcase\d*|\w+_extra\d*", spec.fn.__module__.rsplit(".", 1)[-1])
+    )
+    assert stray == [], stray

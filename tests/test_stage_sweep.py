@@ -276,3 +276,13 @@ def test_concurrent_meta_writers_never_tear_the_meta(tmp_path):
     for t in threads:
         t.join(timeout=30)
     assert errors == [], errors
+
+
+def test_vanished_stage_reads_as_fresh(tmp_path):
+    """A concurrent runner may remove a stage between a publisher's listing
+    and its age check; the age basis must then read "fresh" (now), so the
+    sweep leaves it alone instead of raising."""
+    from datalakejson_spark.functions.incremental_dedup import stage_newest_mtime
+
+    before = time.time()
+    assert stage_newest_mtime(str(tmp_path / "vanished-stage")) >= before
