@@ -1257,9 +1257,8 @@ def compact_index(
                 continue
             key = _PRUNE_KEY[sub]
             # Ranges + per-file row counts from the same sidecar/footer cache —
-            # driver-side metadata, no Spark job (the ledger's
-            # _active_row_count pattern: layout decisions must never cost a
-            # scan of the data they're about). A file whose footer won't read
+            # driver-side metadata, no Spark job (layout decisions must
+            # never cost a scan of the data they're about). A file whose footer won't read
             # gets rows=None (treated as target-sized for the layout checks;
             # never the reason for a rewrite on its own).
             stats = _file_stats(live, key)

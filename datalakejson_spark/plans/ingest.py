@@ -162,12 +162,15 @@ def discover(
     paginated S3 listing (psuedo_code.txt:80-98) and head_objects for size
     (psuedo_code.txt:107-110). 100 TB posture: listing 10^7+ files from the
     driver is the bottleneck, so the walk fans out as an RDD of top-level
-    prefixes — each executor walks one subtree and ships (path, size) rows;
-    only the (bounded) newly-registered count returns to the driver. Below
+    prefixes — each executor walks one subtree and ships (path, size) rows
+    back in one collect (the listing is bounded by the driver exactly as the
+    ledger's register and the reference's batched INSERTs are). Below
     ``DISCOVERY_FANOUT_THRESHOLD`` prefixes the driver walk wins (job
     overhead) and is used automatically; ``distributed`` forces either mode.
     On S3 the per-prefix unit becomes a paginated ListObjectsV2 call — the
-    fan-out shape and the ledger anti-join are unchanged.
+    fan-out shape and the ledger anti-join are unchanged. Spark jobs: the
+    ledger's one collect of the listing in ``register``, plus one for the
+    fan-out's walk.
 
     Also completes interrupted archive moves: a run that crashed between its
     fenced SUCCEEDED commit and the archive step (archive runs after the
@@ -194,42 +197,33 @@ def discover(
         if distributed is not None
         else len(prefixes) >= DISCOVERY_FANOUT_THRESHOLD
     )
-    discovered = local_df(spark, rows, "s3_key string, file_size_bytes long")
     if prefixes:
         if fan_out:
             sc = spark.sparkContext
             slices = min(len(prefixes), sc.defaultParallelism * 4)
-            listed = spark.createDataFrame(
-                sc.parallelize(prefixes, slices).flatMap(
-                    lambda p, _s=suffix: _walk_prefix(p, _s)
-                ),
-                "s3_key string, file_size_bytes long",
+            rows += (
+                sc.parallelize(prefixes, slices)
+                .flatMap(lambda p, _s=suffix: _walk_prefix(p, _s))
+                .collect()
             )
         else:
-            listed = local_df(
-                spark,
-                [r for p in prefixes for r in _walk_prefix(p, suffix)],
-                "s3_key string, file_size_bytes long",
-            )
-        discovered = discovered.unionByName(listed)
+            rows += [r for p in prefixes for r in _walk_prefix(p, suffix)]
+    if not rows:
+        return 0
     ledger = make_ledger(spark, conf)
-    registered = ledger.register(discovered)
-    _finish_interrupted_archives(ledger, discovered, conf)
+    registered = ledger.register(
+        local_df(spark, rows, "s3_key string, file_size_bytes long")
+    )
+    _finish_interrupted_archives(ledger, [key for key, _size in rows], conf)
     return registered
 
 
-def _finish_interrupted_archives(ledger, discovered: DataFrame, conf: IngestConfig) -> None:
+def _finish_interrupted_archives(ledger, keys: list[str], conf: IngestConfig) -> None:
     """Archive any discovered landing file whose ledger row is already
-    SUCCEEDED — the crash-after-commit-before-archive case. The semi join is
-    distributed; only the straggler list (normally empty) is collected."""
-    stragglers = [
-        r[0]
-        for r in ledger.read()
-        .filter(F.col("status") == LedgerStatus.SUCCEEDED)
-        .join(discovered, "s3_key", "left_semi")
-        .select("s3_key")
-        .collect()
-    ]
+    SUCCEEDED — the crash-after-commit-before-archive case. A driver-side
+    key lookup on either ledger backend; the straggler list is normally
+    empty."""
+    stragglers = ledger.keys_with_status(keys, LedgerStatus.SUCCEEDED)
     if stragglers:
         _archive_parallel(stragglers, conf)
 
@@ -463,24 +457,32 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
         good_paths: set[str] = set()
         corrupt_paths: set[str] = set()
         if raw is not None:
-            corrupt = raw.filter(F.col(CORRUPT_COL).isNotNull())
-            good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-
-            result.corrupt_rows = corrupt.count()
+            is_corrupt = F.col(CORRUPT_COL).isNotNull()
+            # One job for every count and path set: corrupt and good rows
+            # per source file (bounded by batch_size, like the claim list).
+            per_file = (
+                raw.groupBy("source_s3_path")
+                .agg(
+                    F.count(F.when(is_corrupt, 1)).alias("n_corrupt"),
+                    F.count(F.when(~is_corrupt, 1)).alias("n_good"),
+                )
+                .collect()
+            )
+            result.corrupt_rows = sum(r.n_corrupt for r in per_file)
+            result.good_rows = sum(r.n_good for r in per_file)
             if result.corrupt_rows:
                 # DLQ: corrupt rows + lineage, bucketed by run id
                 # (sudo_code.txt:169).
-                corrupt.select(CORRUPT_COL, "source_s3_path").write.mode(
-                    "append"
-                ).json(os.path.join(conf.dlq_dir, run_id))
+                raw.filter(is_corrupt).select(
+                    CORRUPT_COL, "source_s3_path"
+                ).write.mode("append").json(os.path.join(conf.dlq_dir, run_id))
                 corrupt_paths = {
-                    _norm(r[0])
-                    for r in corrupt.select("source_s3_path").distinct().collect()
+                    _norm(r.source_s3_path) for r in per_file if r.n_corrupt
                 }
                 fire("ingest:after_dlq_write")
 
-            result.good_rows = good.count()
             if result.good_rows:
+                good = raw.filter(~is_corrupt).drop(CORRUPT_COL)
                 curated = apply_transformations(good, conf.mode_default)
                 # Run stamp: if a crash lands between this append and the
                 # ledger commit, the re-claimed batch re-appends the same
@@ -510,10 +512,7 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                     *PARTITION_COLS
                 ).parquet(stage_dir)
                 _publish_curated_stage(stage_dir, conf.curated_dir)
-                good_paths = {
-                    _norm(r[0])
-                    for r in good.select("source_s3_path").distinct().collect()
-                }
+                good_paths = {_norm(r.source_s3_path) for r in per_file if r.n_good}
                 fire("ingest:after_curated_append")
             raw.unpersist()
 

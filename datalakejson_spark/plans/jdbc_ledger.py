@@ -347,6 +347,33 @@ class JdbcLedger:
         finally:
             conn.close()
 
+    def keys_with_status(self, keys: list[str], status: str) -> list[str]:
+        """The subset of ``keys`` whose row has ``status``: one
+        ``SELECT ... WHERE status = ? AND s3_key IN (...)`` per _BATCH keys."""
+        out: list[str] = []
+        if not keys:
+            return out
+        conn = self._connect()
+        try:
+            for lo in range(0, len(keys), _BATCH):
+                chunk = keys[lo : lo + _BATCH]
+                ps = conn.prepareStatement(
+                    f"SELECT s3_key FROM {_TABLE} WHERE status = ? AND s3_key IN "
+                    f"({', '.join('?' * len(chunk))})"
+                )
+                ps.setString(1, status)
+                for i, key in enumerate(chunk, start=2):
+                    ps.setString(i, key)
+                rs = ps.executeQuery()
+                while rs.next():
+                    out.append(rs.getString(1))
+                rs.close()
+                ps.close()
+            conn.commit()
+            return out
+        finally:
+            conn.close()
+
     # -- analytics surface (spark.read.jdbc) --------------------------------
     def read(self) -> DataFrame:
         """The ledger as a DataFrame — S5's read path. Derby uppercases

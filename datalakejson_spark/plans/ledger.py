@@ -11,8 +11,26 @@ RDS-free redesign (SURVEY.md §7.0): the ledger is a directory of immutable
 parquet snapshots plus a ``_LATEST`` pointer file. Updates write a new
 snapshot and atomically swap the pointer (single-file os.replace — POSIX
 atomic), so a crash mid-update leaves the previous snapshot intact: the
-reference's transactional UPDATE+COMMIT becomes snapshot-and-swap. Ledger
-DataFrame ops (anti-join registration, claim, status upsert) are plain Spark.
+reference's transactional UPDATE+COMMIT becomes snapshot-and-swap.
+
+Driver-side read-modify-write: a ledger is metadata (one small row per
+file), so every operation reads the snapshot parts it needs with
+``pyarrow.parquet``, does its anti-join, ordered claim, lease check and
+fenced transition with ``pyarrow.compute``, and writes each new directory as
+ONE parquet file. No ledger operation launches a Spark job, except the one
+collect of a caller-supplied DataFrame (``register`` and the DataFrame form
+of ``set_status``) — the same bounded collect ``JdbcLedger.register`` does.
+Every Spark action pays analysis, planning and job/stage scheduling (plus a
+job per exchange under AQE); on a table of a few dozen rows that overhead
+would be nearly all of the ledger's cost. Terminal history is never held on
+the driver as a whole: probes filter it batch by batch, and a segment fold,
+a full compaction and ``counts()`` stream it file by file, batch by batch,
+so driver memory is the active part plus one ``_BATCH_ROWS`` batch.
+``read()`` still returns a Spark DataFrame for the monitor and ops
+consumers. Snapshots are written with ``timestamp[us, tz=UTC]`` columns:
+Spark reads them back row-identical through ``LEDGER_SCHEMA``, and
+Spark-written snapshots (INT96 timestamps) are read as the same UTC
+instants.
 
 Status-partitioned snapshot (round 8 — the measured fix for the ~4x10^6-file
 crossover in SCALE.md's ledger curve): the state is split into an ACTIVE part
@@ -42,19 +60,26 @@ broken after ``LOCK_STALE_S``. Files orphaned in PROCESSING by a hard crash
 from __future__ import annotations
 
 import contextlib
+import functools
+import itertools
 import json
 import os
 import shutil
 import threading
 import time
 import uuid
+from datetime import datetime, timezone
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datalakejson_spark.session import local_df
-from pyspark.sql import types as T
 
 
 class LedgerStatus:
@@ -67,13 +92,9 @@ class LedgerStatus:
     QUARANTINED = "QUARANTINED"
 
 
-# Snapshot split: the working set (rewritten per batch) vs completed rows
-# (append-only segments, never rewritten in steady state).
-ACTIVE_STATUSES = (
-    LedgerStatus.PENDING,
-    LedgerStatus.PROCESSING,
-    LedgerStatus.FAILED,
-)
+# Snapshot split: completed rows go to append-only segments, never rewritten
+# in steady state; every other status is the working set (the active part,
+# rewritten per batch).
 TERMINAL_STATUSES = (LedgerStatus.SUCCEEDED, LedgerStatus.QUARANTINED)
 
 # One terminal segment is appended per completing batch; above this many the
@@ -81,17 +102,17 @@ TERMINAL_STATUSES = (LedgerStatus.SUCCEEDED, LedgerStatus.QUARANTINED)
 MAX_TERMINAL_SEGMENTS = 64
 
 # Adaptive split deferral (round 9 — the backfill-phase fix): while terminal
-# rows are at most this fraction of the active dir, a commit keeps them IN
+# rows are at most this fraction of the active dir, a write keeps them IN
 # the active part (one plain write, exactly the legacy cost model) instead of
-# paying the two-pass split + segment append + probe machinery. The
-# reference's opening act is an all-PENDING backfill where the terminal
-# fraction is ~0 and the split bought nothing (r8: 9.0 vs legacy 6.7 s at
-# 10^6); once deferred terminal rows reach the threshold — or the working
-# set shrinks toward the terminal-majority steady state, where each batch's
-# completions easily exceed it — the next commit splits ALL accumulated
-# terminal rows out in one segment write and the active part returns to the
-# pure working set. Write amplification of deferral is bounded by the
-# threshold itself (each deferred rewrite carries <= 5% extra rows).
+# paying the split + segment append. The reference's opening act is an
+# all-PENDING backfill where the terminal fraction is ~0 and the split bought
+# nothing (r8: 9.0 vs legacy 6.7 s at 10^6); once deferred terminal rows
+# exceed the threshold — or the working set shrinks toward the
+# terminal-majority steady state, where each batch's completions easily
+# exceed it — the next write splits ALL accumulated terminal rows out in one
+# segment write and the active part returns to the pure working set. Write
+# amplification of deferral is bounded by the threshold itself (each
+# deferred rewrite carries <= 5% extra rows).
 TERMINAL_SPLIT_MIN_FRAC = 0.05
 
 
@@ -110,14 +131,24 @@ LEDGER_SCHEMA = T.StructType(
     ]
 )
 
+# The same schema as the driver-side snapshot reader/writer sees it
+# (TimestampType -> timestamp[us, tz=UTC]).
+_ARROW_SCHEMA = to_arrow_schema(LEDGER_SCHEMA)
+_TS = _ARROW_SCHEMA.field("last_updated_at").type
+
+# Rows per batch when a snapshot file is read (and per row group when a
+# segment is streamed out): bounds the driver memory of a fold, a full
+# compaction or a history scan to one batch instead of all history.
+_BATCH_ROWS = 1 << 18
+
 
 # A runner that dies holding the lock must not wedge the fleet: locks whose
 # mtime is older than this are broken. A LIVE holder heartbeats the lockfile
 # mtime every LOCK_HEARTBEAT_S from a daemon thread, so lock age is decoupled
-# from how long the critical section runs (a ledger snapshot write is a full
-# Spark job and can far exceed any fixed budget under GC/FS stalls) — only a
-# dead process stops touching its lock. 600 s therefore means "no heartbeat
-# for 10 minutes", not "critical section slower than 10 minutes".
+# from how long the critical section runs (a snapshot write of a large ledger
+# can far exceed any fixed budget under GC/FS stalls) — only a dead process
+# stops touching its lock. 600 s therefore means "no heartbeat for 10
+# minutes", not "critical section slower than 10 minutes".
 LOCK_STALE_S = 600.0
 LOCK_HEARTBEAT_S = 5.0
 
@@ -128,12 +159,93 @@ LOCK_HEARTBEAT_S = 5.0
 PROCESSING_LEASE_S = 1800.0
 
 
+def _schema(columns: list[str] | None) -> pa.Schema:
+    """_ARROW_SCHEMA, or just its ``columns``."""
+    if columns is None:
+        return _ARROW_SCHEMA
+    return pa.schema([_ARROW_SCHEMA.field(c) for c in columns])
+
+
+def _collect(df: DataFrame, columns: list[str]) -> pa.Table:
+    """A caller's DataFrame on the driver as an Arrow table with the
+    ledger's types for ``columns`` (one Spark job)."""
+    return df.toArrow().cast(_schema(columns))
+
+
+def _key_array(paths: list[str] | DataFrame) -> pa.Array:
+    """Distinct keys, first occurrence first (a DataFrame's first column)."""
+    if isinstance(paths, DataFrame):
+        keys = _collect(paths.select(F.col(paths.columns[0]).alias("s3_key")), ["s3_key"])
+        return pc.unique(keys["s3_key"])
+    return pc.unique(pa.array(paths, pa.string()))
+
+
+def _key_range(keys) -> tuple[str | None, str | None]:
+    """(min, max) of a key column; (None, None) when empty."""
+    if len(keys) == 0:
+        return None, None
+    mm = pc.min_max(keys)
+    return mm["min"].as_py(), mm["max"].as_py()
+
+
+def _is_terminal(table: pa.Table):
+    return pc.is_in(table["status"], value_set=pa.array(TERMINAL_STATUSES))
+
+
+def _n_true(mask) -> int:
+    return pc.sum(mask).as_py() or 0
+
+
+def _carries(table: pa.Table, run_id: str):
+    """Rows whose run_id equals ``run_id`` (a NULL run_id never does)."""
+    return pc.fill_null(pc.equal(table["run_id"], run_id), False)
+
+
+def _utc_now() -> pa.TimestampScalar:
+    return pa.scalar(datetime.now(timezone.utc), _TS)
+
+
+def _transition(
+    table: pa.Table,
+    keys: pa.Array,
+    statuses: pa.Array,
+    errors: pa.Array,
+    now: pa.Scalar,
+    run_id: str | None,
+    increment_retry: bool = False,
+    fence_run_id: str | None = None,
+) -> pa.Table:
+    """``table`` with the rows whose s3_key is ``keys[i]`` moved to
+    ``statuses[i]`` / ``errors[i]`` at ``now`` (and stamped with ``run_id``
+    when given). ``fence_run_id``: a row transitions ONLY if its current
+    ``run_id`` equals the fence (a NULL run_id never matches)."""
+    idx = pc.index_in(table["s3_key"], value_set=keys)
+    hit = pc.is_valid(idx)
+    if fence_run_id is not None:
+        hit = pc.and_(hit, _carries(table, fence_run_id))
+    new = {
+        "status": pc.take(statuses, idx),
+        "error_message": pc.take(errors, idx),
+        "last_updated_at": now,
+    }
+    if increment_retry:
+        new["retry_count"] = pc.add(table["retry_count"], pa.scalar(1, pa.int32()))
+    if run_id is not None:
+        new["run_id"] = pa.scalar(run_id, pa.string())
+    for name, value in new.items():
+        i = table.schema.get_field_index(name)
+        table = table.set_column(
+            i, table.schema.field(i), pc.if_else(hit, value, table[name])
+        )
+    return table
+
+
 class LedgerLockLost(RuntimeError):
     """The mutex token vanished mid-critical-section: a stale-break racer
     renamed our fresh lock away and its restore lost to a new acquirer
-    (see ``_break_if_stale``). ``overwrite`` raises this BEFORE the pointer
-    swap — nothing was published — and the public operations retry their
-    whole read-modify-write under a fresh acquisition."""
+    (see ``_break_if_stale``). ``_publish`` raises this BEFORE the pointer
+    swap — nothing was published — and ``register`` retries its whole
+    read-modify-write under a fresh acquisition."""
 
 
 class Ledger:
@@ -272,68 +384,125 @@ class Ledger:
             return json.loads(txt)
         return None
 
-    def _current_parts(self) -> tuple[str | None, list[str], bool]:
-        """(active_version, terminal_segments, is_legacy). A legacy pointer
-        (pre-split: one bare version name) reads as the active part holding
-        ALL rows — including terminal ones — and migrates to the split
-        layout on its next write."""
+    def _current_parts(self) -> tuple[str | None, list[str]]:
+        """(active_version, terminal_segments). A legacy pointer (pre-split:
+        one bare version name) reads as the active part holding ALL rows —
+        including terminal ones — and migrates to the split layout on its
+        next write (``_commit`` moves its terminal rows out as soon as they
+        exceed TERMINAL_SPLIT_MIN_FRAC)."""
         try:
             txt = self._pointer.read_text().strip()
         except FileNotFoundError:
-            return None, [], False
+            return None, []
         if not txt:
-            return None, [], False
+            return None, []
         if txt.startswith("{"):
             d = json.loads(txt)
-            return d.get("active"), list(d.get("terminal", [])), False
-        return txt, [], True
+            return d.get("active"), list(d.get("terminal", []))
+        return txt, []
 
-    def _deferred_terminal(self) -> int | None:
-        """Terminal rows currently riding in the active dir (an UPPER bound
-        — see _commit_active_update), or None when unknowable (legacy
-        pointer). Pre-round-9 split pointers lack the field and never
-        deferred, so 0 is exact for them."""
-        d = self._pointer_meta()
-        if d is None:
-            return None if self._pointer.exists() else 0
-        return int(d.get("deferred_terminal", 0))
-
-    def _active_row_count(self) -> int | None:
-        """Row count of the active dir from parquet FOOTER metadata — a
-        driver-side file-stat, no Spark job. None when unavailable (the
-        caller falls back to counting)."""
-        active, _segs, legacy = self._current_parts()
-        if not active or legacy:
-            return None
-        try:
-            import pyarrow.parquet as pq
-
-            return sum(
-                pq.ParquetFile(str(f)).metadata.num_rows
-                for f in (self.root / active).glob("*.parquet")
-            )
-        except Exception:  # noqa: BLE001 — advisory fast path only
-            return None
-
-    def _read_dirs(self, names: list[str]) -> DataFrame:
-        paths = [str(self.root / n) for n in names]
+    def read(self) -> DataFrame:
+        """The whole ledger as a Spark DataFrame (monitor/ops surface)."""
+        active, segs = self._current_parts()
+        paths = [str(self.root / n) for n in ([active] if active else []) + segs]
         if not paths:
             return local_df(self.spark, [], LEDGER_SCHEMA)
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(*paths)
 
-    def read(self) -> DataFrame:
-        active, segs, _legacy = self._current_parts()
-        return self._read_dirs(([active] if active else []) + segs)
+    def _batches(
+        self,
+        names: list[str],
+        columns: list[str] | None = None,
+        keys: pa.Array | None = None,
+    ):
+        """The rows of the named snapshot dirs, file by file, as Arrow
+        tables of at most _BATCH_ROWS rows (only ``columns``; with ``keys``,
+        only rows whose s3_key is in ``keys``). Batches are conformed to
+        _ARROW_SCHEMA: a Spark-written file's INT96 timestamps come back
+        naive, and they are UTC instants."""
+        schema = _schema(columns)
+        for name in names:
+            for f in sorted((self.root / name).iterdir()):  # a pruned dir raises
+                if f.suffix != ".parquet" or f.name.startswith(("_", ".")):
+                    continue
+                with pq.ParquetFile(f, coerce_int96_timestamp_unit="us") as pf:
+                    for b in pf.iter_batches(_BATCH_ROWS, columns=schema.names):
+                        t = pa.Table.from_batches([b]).select(schema.names).cast(schema)
+                        if keys is not None:
+                            t = t.filter(pc.is_in(t["s3_key"], value_set=keys))
+                        yield t
+
+    def _load(
+        self,
+        names: list[str],
+        columns: list[str] | None = None,
+        keys: pa.Array | None = None,
+    ) -> pa.Table:
+        """``_batches`` as one Arrow table: for the active part and for
+        key probes, never for all of terminal history."""
+        parts = list(self._batches(names, columns, keys))
+        return pa.concat_tables(parts) if parts else _schema(columns).empty_table()
+
+    def _load_active(self) -> tuple[pa.Table, list[str]]:
+        """(the active dir's rows, the terminal segment names). Under a
+        legacy pointer the active dir still holds terminal rows until the
+        next write migrates them."""
+        active, segs = self._current_parts()
+        return self._load([active] if active else []), segs
+
+    def _lookup(self, keys: pa.Array, columns: list[str]) -> pa.Table:
+        """Lock-free point read: the rows for ``keys`` from the active part
+        and the terminal segments whose key range can contain one."""
+        active, segs = self._current_parts()
+        names = ([active] if active else []) + self._segs_for_keys(
+            segs, *_key_range(keys)
+        )
+        return self._load(names, columns, keys)
+
+    def _write(self, name: str, table: pa.Table) -> None:
+        """One snapshot dir holding one parquet file."""
+        d = self.root / name
+        d.mkdir(exist_ok=True)
+        pq.write_table(table, d / "part-00000.parquet")
+
+    def _write_segment(
+        self,
+        name: str,
+        tables,
+        key_range: tuple[str, str] | None = None,
+    ) -> int:
+        """Stream ``tables`` into the terminal segment dir ``name`` (one
+        parquet file, written table by table) with its ``_RANGE.json``:
+        ``key_range`` when the caller knows it, else the min/max over the
+        tables. Returns the rows written; an empty segment is removed."""
+        d = self.root / name
+        d.mkdir(exist_ok=True)
+        n, lo, hi = 0, None, None
+        with pq.ParquetWriter(d / "part-00000.parquet", _ARROW_SCHEMA) as w:
+            for t in tables:
+                if not t.num_rows:
+                    continue
+                w.write_table(t)
+                n += t.num_rows
+                if key_range is None:
+                    kmin, kmax = _key_range(t["s3_key"])
+                    lo = kmin if lo is None else min(lo, kmin)
+                    hi = kmax if hi is None else max(hi, kmax)
+        if not n:
+            shutil.rmtree(d, ignore_errors=True)
+            return 0
+        self._write_seg_range(name, *(key_range or (lo, hi)))
+        return n
 
     # -- per-segment key-range sidecars (round 9) ----------------------------
     # Written INSIDE the segment dir as ``_RANGE.json`` (the leading
-    # underscore makes Spark's parquet reader treat it as metadata), so the
+    # underscore makes parquet readers treat it as metadata), so the
     # sidecar travels with the segment through folds and prunes. Advisory:
     # a missing/corrupt sidecar merely means the probe must include that
     # segment (legacy segments keep working). This is the reference's
     # ``idx_processing_status``+pkey analogue for the terminal majority: a
-    # commit-path probe over 10^8 terminal rows touches only segments whose
-    # [min,max] s3_key range can contain a batch key, so probe cost tracks
+    # register or commit over 10^8 terminal rows touches only segments whose
+    # [min,max] s3_key range can contain one of its keys, so its cost tracks
     # batch locality instead of total history.
     def _write_seg_range(self, seg: str, kmin: str | None, kmax: str | None) -> None:
         if kmin is None or kmax is None:
@@ -357,42 +526,6 @@ class Ledger:
             # ANY unreadable sidecar degrades to a conservative scan.
             return None
 
-    def _dir_key_stats(self, dirname: str) -> tuple[str, str] | None:
-        """min/max s3_key of a written parquet dir from FOOTER column
-        statistics — driver-side, no Spark job (the _active_row_count
-        pattern). Parquet stat truncation keeps the bounds conservative: a
-        truncated min is a prefix (<= true min) and a truncated max has its
-        last byte incremented (>= true max). None when any file lacks
-        usable stats (caller falls back to an aggregation job)."""
-        try:
-            import pyarrow.parquet as pq
-
-            mins: list[str] = []
-            maxs: list[str] = []
-            for f in (self.root / dirname).glob("*.parquet"):
-                md = pq.ParquetFile(str(f)).metadata
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        if col.path_in_schema != "s3_key":
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            return None
-                        mins.append(str(st.min))
-                        maxs.append(str(st.max))
-            if not mins:
-                return None
-            return min(mins), max(maxs)
-        except Exception:  # noqa: BLE001 — advisory fast path only
-            return None
-
-    def _key_bounds(self, keys: DataFrame) -> tuple[str | None, str | None]:
-        row = keys.agg(
-            F.min("s3_key").alias("kmin"), F.max("s3_key").alias("kmax")
-        ).first()
-        return (row.kmin, row.kmax) if row else (None, None)
-
     def _segs_for_keys(
         self, segs: list[str], kmin: str | None, kmax: str | None
     ) -> list[str]:
@@ -407,15 +540,9 @@ class Ledger:
                 out.append(s)
         return out
 
-    def _active_part(self) -> DataFrame:
-        """Contents of the active DIR (unfiltered: under a legacy pointer it
-        still holds terminal rows until the next write migrates them)."""
-        active, _segs, _legacy = self._current_parts()
-        return self._read_dirs([active] if active else [])
-
     def _owns_lock(self) -> bool:
         """Does the lockfile still carry this thread's mutex token? Outside a
-        mutex (direct overwrite in tests/tools) there is nothing to verify."""
+        mutex (direct publish in tests/tools) there is nothing to verify."""
         token = getattr(self._held, "token", None)
         if token is None:
             return True
@@ -424,35 +551,50 @@ class Ledger:
         except OSError:
             return False  # renamed/unlinked — dispossessed either way
 
-    def overwrite(self, df: DataFrame) -> None:
-        """Full-state last-writer-wins write (kept public; used by the rare
-        paths — terminal re-enqueue compaction, tools). Splits ``df`` by
-        status group into a fresh active part + ONE terminal segment: this
-        is also what compacts legacy layouts and folds accumulated
-        segments. A state with zero terminal rows publishes no segment
-        (ADVICE r8: never create empty segment dirs)."""
-        df = df.persist()
-        try:
-            terminal = df.filter(F.col("status").isin(*TERMINAL_STATUSES))
-            self._publish(
-                df.filter(F.col("status").isin(*ACTIVE_STATUSES)),
-                [],
-                terminal if terminal.limit(1).count() else None,
-                deferred_terminal=0,  # active part is status-filtered
-            )
-        finally:
-            df.unpersist()
+    def _commit(self, table: pa.Table, segments: list[str]) -> None:
+        """Publish ``table`` as the new active part. Rows whose status is
+        terminal move to one appended segment when they exceed
+        TERMINAL_SPLIT_MIN_FRAC of the table.
 
-    def _publish(
-        self,
-        active_df: DataFrame,
-        segments: list[str],
-        new_segment_df: DataFrame | None = None,
-        deferred_terminal: int | None = None,
-    ) -> None:
-        """Write the active part (and optionally one appended terminal
-        segment), fold segments when over MAX_TERMINAL_SEGMENTS, then
-        atomically swap the pointer and prune unreferenced dirs.
+        Adaptive deferral (round 9): below that fraction — the all-PENDING
+        backfill phase, or a fully fenced-out / no-match commit whose
+        terminal delta is ZERO rows (ADVICE r8: such a commit used to append
+        an EMPTY segment per batch, burning segment slots) — the commit is
+        one plain write and terminal rows ride along in the active part
+        until the fraction crosses the threshold, at which point one segment
+        write drains them all. The table is in memory, so the decision uses
+        the exact terminal count, and the pointer records it."""
+        terminal = _is_terminal(table)
+        if _n_true(terminal) > TERMINAL_SPLIT_MIN_FRAC * table.num_rows:
+            seg = f"t{time.time_ns()}"  # never empty: > 0 terminal rows
+            self._write_segment(seg, [table.filter(terminal)])
+            self._publish(table.filter(pc.invert(terminal)), [*segments, seg])
+        else:
+            self._publish(table, segments)
+
+    def _compact(self, move, active: pa.Table, segments: list[str]) -> None:
+        """Full compaction, for a transition that touches a terminal row:
+        every row of the active part and of every segment goes through
+        ``move``; the terminal ones stream into ONE new segment, file by
+        file, and the rest (the active part plus any row that left a
+        terminal status) become the new active part."""
+        rest: list[pa.Table] = []
+
+        def terminal_rows():
+            for t in itertools.chain([active], self._batches(segments)):
+                t = move(t)
+                done = _is_terminal(t)
+                rest.append(t.filter(pc.invert(done)))
+                yield t.filter(done)
+
+        seg = f"t{time.time_ns()}c"
+        segs = [seg] if self._write_segment(seg, terminal_rows()) else []
+        self._publish(pa.concat_tables(rest), segs)
+
+    def _publish(self, active: pa.Table, segments: list[str]) -> None:
+        """Write the active part, fold the segments into one (streamed,
+        batch by batch) when over MAX_TERMINAL_SEGMENTS, then atomically
+        swap the pointer and prune unreferenced dirs.
 
         Dispossession guard (the _break_if_stale restore race): immediately
         before the pointer swap, re-verify the lockfile still carries our
@@ -464,54 +606,21 @@ class Ledger:
         read-modify-write under a fresh acquisition."""
         ns = time.time_ns()
         version = f"v{ns}"
-        cols = [f.name for f in LEDGER_SCHEMA.fields]
-        active_df.select(cols).repartition(1).write.mode("overwrite").parquet(
-            str(self.root / version)
-        )
+        self._write(version, active)
         segs = list(segments)
-        if new_segment_df is not None:
-            seg = f"t{ns}"
-            new_segment_df.select(cols).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / seg))
-            # Sidecar bounds come from the just-written file's footer stats
-            # (driver-side, no job); the aggregation is only the fallback.
-            self._write_seg_range(
-                seg,
-                *(self._dir_key_stats(seg) or self._key_bounds(new_segment_df)),
-            )
-            segs.append(seg)
         if len(segs) > MAX_TERMINAL_SEGMENTS:
             merged = f"t{ns}c"
-            folded = self._read_dirs(segs)
-            folded.select(cols).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / merged))
-            # Fold the sidecars driver-side when every input has one; a
-            # legacy (pre-sidecar) segment falls back to the merged file's
-            # own footer stats, then to a re-scan.
             ranges = [self._seg_range(s) for s in segs]
-            if all(r is not None for r in ranges):
-                self._write_seg_range(
-                    merged,
-                    min(r[0] for r in ranges),
-                    max(r[1] for r in ranges),
-                )
-            else:
-                self._write_seg_range(
-                    merged,
-                    *(self._dir_key_stats(merged) or self._key_bounds(folded)),
-                )
-            segs = [merged]
+            known = None  # the sidecars' union; any missing → per-batch
+            if all(ranges):
+                known = min(r[0] for r in ranges), max(r[1] for r in ranges)
+            folded = self._write_segment(merged, self._batches(segs), known)
+            segs = [merged] if folded else []
         if not self._owns_lock():
             raise LedgerLockLost(
                 f"ledger lock {self._lockfile} stolen mid-write; snapshot "
                 f"{version} aborted before publish"
             )
-        if deferred_terminal is None:
-            # Preserve the current deferral bookkeeping (writes that cannot
-            # change the active dir's terminal content: register, claim).
-            deferred_terminal = self._deferred_terminal() or 0
         # Monotonic publish counter: read-increment under the mutex, so it
         # advances by exactly one per publish REGARDLESS of which machine's
         # clock minted the version name — the retirement grace counts these,
@@ -526,7 +635,8 @@ class Ledger:
                 {
                     "active": version,
                     "terminal": segs,
-                    "deferred_terminal": deferred_terminal,
+                    # terminal rows riding in the active dir (deferral)
+                    "deferred_terminal": _n_true(_is_terminal(active)),
                     "publish_seq": seq,
                 }
             )
@@ -626,37 +736,54 @@ class Ledger:
     def register(self, discovered: DataFrame) -> int:
         """Idempotent insert of (s3_key, file_size_bytes) rows as PENDING —
         the ``ON CONFLICT DO NOTHING`` anti-join (J1; sudo_code.txt:90).
-        Returns the number of newly registered files."""
+        Returns the number of newly registered files.
+
+        The discovered frame is collected once, outside the mutex (the
+        JdbcLedger bound). The anti-join checks the active part plus only
+        the terminal segments whose ``_RANGE.json`` can contain a discovered
+        key (a completed file must not re-register); the write touches only
+        the active part (new rows are all PENDING)."""
+        found = _collect(
+            discovered.select("s3_key", "file_size_bytes"), ["s3_key", "file_size_bytes"]
+        )
+        keys = pc.unique(found["s3_key"])
+        if len(keys) < found.num_rows:  # first row per key
+            found = found.take(
+                pc.index_in(keys, value_set=found["s3_key"].combine_chunks())
+            )
+        if not found.num_rows:
+            return 0
 
         def body() -> int:
-            # The anti-join reads ALL keys (active + terminal — a completed
-            # file must not re-register), column-pruned to s3_key; the WRITE
-            # touches only the active part (new rows are all PENDING).
-            current = self.read()
-            now = F.current_timestamp()
-            fresh = (
-                discovered.select("s3_key", "file_size_bytes")
-                .dropDuplicates(["s3_key"])
-                .join(current.select("s3_key"), "s3_key", "left_anti")
-                .withColumn("status", F.lit(LedgerStatus.PENDING))
-                .withColumn("retry_count", F.lit(0))
-                .withColumn("error_message", F.lit(None).cast("string"))
-                .withColumn("first_discovered_at", now)
-                .withColumn("last_updated_at", now)
-                .withColumn("run_id", F.lit(None).cast("string"))
-            ).persist()  # count + publish: one anti-join execution
-            try:
-                n_new = fresh.count()
-                if n_new:
-                    _active, segs, legacy = self._current_parts()
-                    if legacy:
-                        self.overwrite(current.unionByName(fresh))
-                    else:
-                        self._publish(
-                            self._active_part().unionByName(fresh), segs
-                        )
-            finally:
-                fresh.unpersist()
+            active, segs = self._load_active()
+            known = pa.concat_tables(
+                [
+                    active.select(["s3_key"]),
+                    self._load(
+                        self._segs_for_keys(segs, *_key_range(keys)), ["s3_key"], keys
+                    ),
+                ]
+            )["s3_key"].combine_chunks()
+            fresh = found.filter(
+                pc.invert(pc.is_in(found["s3_key"], value_set=known))
+            )
+            n_new = fresh.num_rows
+            if n_new:
+                now = _utc_now()
+                rows = pa.table(
+                    {
+                        "s3_key": fresh["s3_key"],
+                        "file_size_bytes": fresh["file_size_bytes"],
+                        "status": pa.repeat(LedgerStatus.PENDING, n_new),
+                        "retry_count": pa.repeat(pa.scalar(0, pa.int32()), n_new),
+                        "error_message": pa.nulls(n_new, pa.string()),
+                        "first_discovered_at": pa.repeat(now, n_new),
+                        "last_updated_at": pa.repeat(now, n_new),
+                        "run_id": pa.nulls(n_new, pa.string()),
+                    },
+                    schema=_ARROW_SCHEMA,
+                )
+                self._commit(pa.concat_tables([active, rows]), segs)
             return n_new
 
         return self._retrying(body)
@@ -682,29 +809,42 @@ class Ledger:
         majority never participates in a claim (the reference's
         ``idx_processing_status`` index, sudo_code.txt:49)."""
         with self._mutex():
-            current = self._active_part()
-            stale = (F.col("status") == LedgerStatus.PROCESSING) & (
-                F.col("last_updated_at")
-                < F.current_timestamp() - F.expr(f"INTERVAL {int(stale_lease_s)} SECONDS")
-            )
-            claimable = (
-                current.filter(
-                    F.col("status").isin(LedgerStatus.PENDING, LedgerStatus.FAILED)
-                    | stale
+            active, segs = self._load_active()
+            now = _utc_now()
+            cutoff = pa.scalar(now.value - int(stale_lease_s) * 1_000_000, _TS)
+            status = active["status"]
+            claimable = active.filter(
+                pc.or_(
+                    pc.is_in(
+                        status,
+                        value_set=pa.array([LedgerStatus.PENDING, LedgerStatus.FAILED]),
+                    ),
+                    pc.and_(
+                        pc.equal(status, LedgerStatus.PROCESSING),
+                        pc.less(active["last_updated_at"], cutoff),
+                    ),
                 )
-                .orderBy("first_discovered_at", "s3_key")
-                .limit(batch_size)
             )
-            paths = [r.s3_key for r in claimable.select("s3_key").collect()]
-            if paths:
-                self._set_status_unlocked(
-                    paths,
-                    LedgerStatus.PROCESSING,
-                    run_id=run_id,
+            if not claimable.num_rows:
+                return []
+            order = [("first_discovered_at", "ascending"), ("s3_key", "ascending")]
+            picked = claimable.take(
+                pc.select_k_unstable(claimable, k=batch_size, sort_keys=order)
+            )["s3_key"].combine_chunks()
+            n = len(picked)
+            self._commit(
+                _transition(
+                    active,
+                    picked,
+                    pa.repeat(LedgerStatus.PROCESSING, n),
+                    pa.nulls(n, pa.string()),
+                    now,
+                    run_id,
                     increment_retry=True,
-                    _keys_known_active=True,  # picked from the active part
-                )
-            return paths
+                ),
+                segs,
+            )
+            return picked.to_pylist()
 
     def set_status(
         self,
@@ -725,263 +865,17 @@ class Ledger:
         and whose files were reclaimed by another runner is fenced out here
         instead of silently overwriting the new owner's state. Returns the
         fenced-out (lost-claim) paths; empty when not fencing."""
+        keys = _key_array(paths)
+        n = len(keys)
         with self._mutex():
-            return self._set_status_unlocked(
-                paths,
-                status,
-                error_message=error_message,
+            return self._update(
+                keys,
+                pa.repeat(pa.scalar(status, pa.string()), n),
+                pa.repeat(pa.scalar(error_message, pa.string()), n),
                 run_id=run_id,
                 increment_retry=increment_retry,
                 fence_run_id=fence_run_id,
             )
-
-    def _terminal_hit(
-        self,
-        segs: list[str],
-        keys: DataFrame,
-        fence_run_id: str | None,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> bool:
-        """Does any requested key currently live in a terminal segment AND
-        could its transition actually apply? Read-only key-pruned probe;
-        True routes the operation to the rare full-compaction path (a
-        terminal row is genuinely being transitioned). Under a fence only
-        terminal rows CARRYING the fence run_id can transition — a row
-        reclaimed-and-completed by another runner carries that runner's id,
-        is fenced out untouched, and must NOT trigger a spurious O(N)
-        rewrite (a routine lease-expiry race, not an operator action).
-
-        Range-pruned (round 9): only segments whose ``_RANGE.json`` sidecar
-        can contain a batch key are scanned, so the probe cost tracks batch
-        key locality, not total terminal history."""
-        if not segs:
-            return False
-        if key_bounds is None:
-            key_bounds = self._key_bounds(keys)
-        segs = self._segs_for_keys(segs, *key_bounds)
-        if not segs:
-            return False
-        term = self._read_dirs(segs).join(
-            F.broadcast(keys.select("s3_key")), "s3_key", "left_semi"
-        )
-        if fence_run_id is not None:
-            term = term.filter(F.col("run_id") == F.lit(fence_run_id))
-        return term.limit(1).count() > 0
-
-    def _fenced_out(
-        self,
-        keys: DataFrame,
-        fence_run_id: str,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> list[str]:
-        """Requested keys whose current row does NOT carry the fence run_id
-        (lost claims). Bounded by the batch's key list; reads the active
-        part plus only the terminal segments whose key range can contain a
-        batch key (a reclaimed row may already sit in a terminal segment,
-        but the ``_RANGE.json`` sidecars exclude the segments that cannot
-        hold one — the commit path stays O(active + touched segments), not
-        O(all history)."""
-        active, segs, _legacy = self._current_parts()
-        if key_bounds is None:
-            key_bounds = self._key_bounds(keys)
-        segs = self._segs_for_keys(segs, *key_bounds)
-        state = self._read_dirs(([active] if active else []) + segs)
-        return [
-            r.s3_key
-            for r in state
-            .join(F.broadcast(keys.select("s3_key")), "s3_key", "left_semi")
-            .filter(
-                F.col("run_id").isNull()
-                | (F.col("run_id") != F.lit(fence_run_id))
-            )
-            .select("s3_key")
-            .collect()
-        ]
-
-    def _route_update(
-        self,
-        keys: DataFrame,
-        transform,
-        fence_run_id: str | None,
-        may_move: bool,
-        skip_probe: bool = False,
-        batch_terminal_bound: int | None = None,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> None:
-        """Shared routing tail of the two update paths (set_status /
-        apply_outcomes): fast active-part publish, or the rare full
-        compaction when a terminal row is genuinely being transitioned.
-        ``batch_terminal_bound``: driver-side upper bound on how many rows
-        this update can move to a terminal status (enables the no-persist
-        deferral fast path in _commit_active_update). ``key_bounds``:
-        driver-side (min, max) of the batch keys where known — saves the
-        probe its aggregation job."""
-        _active, segs, legacy = self._current_parts()
-        if (
-            not skip_probe
-            and not legacy
-            and self._terminal_hit(segs, keys, fence_run_id, key_bounds)
-        ):
-            self.overwrite(transform(self.read()))
-            return
-        self._commit_active_update(
-            transform(self._active_part()),
-            segs,
-            may_move or legacy,
-            batch_terminal_bound=None if legacy else batch_terminal_bound,
-        )
-
-    def _set_status_unlocked(
-        self,
-        paths: list[str] | DataFrame,
-        status: str,
-        error_message: str | None = None,
-        run_id: str | None = None,
-        increment_retry: bool = False,
-        fence_run_id: str | None = None,
-        _keys_known_active: bool = False,
-    ) -> list[str]:
-        if isinstance(paths, DataFrame):
-            keys = paths.select(F.col(paths.columns[0]).alias("s3_key"))
-            kb = None  # computed (once) by the consumers that need it
-        else:
-            keys = local_df(
-                self.spark, [(p,) for p in paths], "s3_key string"
-            )
-            # Driver-side bounds: the probe and fenced-out check need no
-            # aggregation job at all for list-keyed transitions.
-            kb = (min(paths), max(paths)) if paths else (None, None)
-        hit = F.col("_hit").isNotNull()
-        fenced_out: list[str] = []
-        if fence_run_id is not None:
-            hit = hit & (F.col("run_id") == F.lit(fence_run_id))
-            fenced_out = self._fenced_out(keys, fence_run_id, key_bounds=kb)
-
-        def transform(df: DataFrame) -> DataFrame:
-            return (
-                df.join(
-                    F.broadcast(keys.withColumn("_hit", F.lit(1))),
-                    "s3_key",
-                    "left",
-                )
-                .withColumn(
-                    "status",
-                    F.when(hit, F.lit(status)).otherwise(F.col("status")),
-                )
-                .withColumn(
-                    "retry_count",
-                    F.when(
-                        hit & F.lit(increment_retry), F.col("retry_count") + 1
-                    ).otherwise(F.col("retry_count")),
-                )
-                .withColumn(
-                    "error_message",
-                    F.when(hit, F.lit(error_message)).otherwise(
-                        F.col("error_message")
-                    ),
-                )
-                .withColumn(
-                    "last_updated_at",
-                    F.when(hit, F.current_timestamp()).otherwise(
-                        F.col("last_updated_at")
-                    ),
-                )
-                .withColumn(
-                    "run_id",
-                    F.when(
-                        hit & F.lit(run_id is not None), F.lit(run_id)
-                    ).otherwise(F.col("run_id")),
-                )
-                .drop("_hit")
-            )
-
-        self._route_update(
-            keys,
-            transform,
-            fence_run_id,
-            # Rows can land in terminal only when this transition targets a
-            # terminal status (legacy migration is handled by the router).
-            may_move=status in TERMINAL_STATUSES,
-            skip_probe=_keys_known_active,
-            # Driver-side terminal bound: exact for list-keyed transitions;
-            # unknown (fallback split path) for DataFrame-keyed bulk flips.
-            batch_terminal_bound=(
-                len(paths)
-                if status in TERMINAL_STATUSES and not isinstance(paths, DataFrame)
-                else (None if status in TERMINAL_STATUSES else 0)
-            ),
-            key_bounds=kb,
-        )
-        return fenced_out
-
-    def _commit_active_update(
-        self,
-        updated: DataFrame,
-        segs: list[str],
-        may_move: bool,
-        batch_terminal_bound: int | None = None,
-    ) -> None:
-        """Publish an updated ACTIVE part: rows whose new status is terminal
-        move to an appended segment; the rest rewrite the active part.
-        ``may_move=False`` (statically no terminal-bound rows — e.g. a
-        claim's PROCESSING flip) skips the segment write entirely. The
-        persist keeps the two filtered writes consistent (one evaluation of
-        current_timestamp).
-
-        Adaptive deferral (round 9): even when terminal-bound rows are
-        possible, the split is paid only once they exceed
-        TERMINAL_SPLIT_MIN_FRAC of the active dir. Below that — the
-        all-PENDING backfill phase, or a fully fenced-out / no-match commit
-        whose terminal delta is ZERO rows (ADVICE r8: such a commit used to
-        append an EMPTY segment per batch, burning segment slots) — the
-        commit is one plain legacy-cost write and terminal rows simply ride
-        along in the active part until the fraction crosses the threshold,
-        at which point one segment write drains them all.
-
-        The defer decision is DRIVER-SIDE metadata, not a Spark job: the
-        pointer tracks an upper bound on deferred terminal rows, callers
-        pass the batch's terminal-bound row count, and the active dir size
-        comes from parquet footers — so the deferred path is exactly ONE
-        write (no persist, no counts; measured: persist+counts alone held
-        the 10^6 all-PENDING batch at ~9 s vs legacy 6.7). The bound only
-        ever overcounts (fenced-out/no-match rows never actually move), so
-        the worst case is a slightly-early split, after which the recorded
-        count resets to exact zero."""
-        if not may_move:
-            self._publish(updated, segs)
-            return
-        is_terminal = F.col("status").isin(*TERMINAL_STATUSES)
-        deferred = self._deferred_terminal()
-        n_active = self._active_row_count()
-        if (
-            deferred is not None
-            and batch_terminal_bound is not None
-            and n_active is not None
-        ):
-            est_term = deferred + batch_terminal_bound
-            if n_active == 0 or est_term <= TERMINAL_SPLIT_MIN_FRAC * n_active:
-                self._publish(updated, segs, deferred_terminal=est_term)
-                return
-        # Split (or fall back where driver-side metadata is unavailable —
-        # legacy pointers, DataFrame-keyed bulk transitions): one persist,
-        # two filtered writes, and the deferral bookkeeping resets to the
-        # truth (zero terminal rows remain in the active part).
-        updated = updated.persist()
-        try:
-            terminal = updated.filter(is_terminal)
-            if terminal.limit(1).count() == 0:
-                # Nothing actually transitioned (fully fenced-out commit) and
-                # nothing was deferred: never append an empty segment.
-                self._publish(updated, segs, deferred_terminal=0)
-            else:
-                self._publish(
-                    updated.filter(~is_terminal),
-                    segs,
-                    terminal,
-                    deferred_terminal=0,
-                )
-        finally:
-            updated.unpersist()
 
     def apply_outcomes(
         self,
@@ -999,91 +893,79 @@ class Ledger:
         owns the claim. Reclaimed rows (lease expired, another runner took
         over) are left untouched and returned as lost-claim paths so the
         caller can abort their side effects (see ingest_batch)."""
-        rows = [
-            (p, status, msg)
-            for paths, status, msg in outcomes
-            for p in paths
-        ]
-        if not rows:
+        first: dict[str, tuple[str, str | None]] = {}
+        for paths, status, msg in outcomes:
+            for p in paths:
+                first.setdefault(p, (status, msg))
+        if not first:
             return []
-        updates = local_df(
-            self.spark, rows, "s3_key string, new_status string, new_error string"
-        ).dropDuplicates(["s3_key"])
         with self._mutex():
-            return self._apply_updates_unlocked(
-                updates,
-                run_id,
+            return self._update(
+                pa.array(list(first), pa.string()),
+                pa.array([s for s, _ in first.values()], pa.string()),
+                pa.array([m for _, m in first.values()], pa.string()),
+                run_id=run_id,
                 fence_run_id=run_id if fence else None,
-                # Statuses are known driver-side: a commit carrying only
-                # active outcomes (e.g. all-FAILED retry batch) must not
-                # append an empty terminal segment per batch.
-                may_move=any(
-                    paths and status in TERMINAL_STATUSES
-                    for paths, status, _ in outcomes
-                ),
-                batch_terminal_bound=len(
-                    {
-                        p
-                        for paths, status, _ in outcomes
-                        if status in TERMINAL_STATUSES
-                        for p in paths
-                    }
-                ),
-                key_bounds=(
-                    min(r[0] for r in rows),
-                    max(r[0] for r in rows),
-                ),
             )
 
-    def _apply_updates_unlocked(
+    def _update(
         self,
-        updates: DataFrame,
-        run_id: str,
+        keys: pa.Array,
+        statuses: pa.Array,
+        errors: pa.Array,
+        run_id: str | None,
+        increment_retry: bool = False,
         fence_run_id: str | None = None,
-        may_move: bool = True,
-        batch_terminal_bound: int | None = None,
-        key_bounds: tuple[str | None, str | None] | None = None,
     ) -> list[str]:
-        hit = F.col("new_status").isNotNull()
+        """Shared body of set_status / apply_outcomes (mutex held). Returns
+        the fenced-out keys: requested keys whose current row does NOT carry
+        the fence run_id (lost claims).
+
+        The commit reads the active part plus only the terminal segments
+        whose ``_RANGE.json`` can contain a batch key (a reclaimed row may
+        already sit in a terminal segment), so it stays O(active + touched
+        segments), not O(all history). If a requested key lives in a
+        terminal segment AND its transition can apply, the operation takes
+        the rare full-compaction path (a terminal row is genuinely being
+        transitioned). Under a fence only terminal rows CARRYING the fence
+        run_id can transition — a row reclaimed-and-completed by another
+        runner carries that runner's id, is fenced out untouched, and must
+        NOT trigger a spurious O(N) rewrite (a routine lease-expiry race,
+        not an operator action)."""
+        if not len(keys):
+            return []
+        active, segs = self._load_active()
+        touched = self._load(
+            self._segs_for_keys(segs, *_key_range(keys)), ["s3_key", "run_id"], keys
+        )
         fenced_out: list[str] = []
         if fence_run_id is not None:
-            hit = hit & (F.col("run_id") == F.lit(fence_run_id))
-            fenced_out = self._fenced_out(updates, fence_run_id, key_bounds)
-
-        def transform(df: DataFrame) -> DataFrame:
-            return (
-                df.join(F.broadcast(updates), "s3_key", "left")
-                .withColumn(
-                    "status",
-                    F.when(hit, F.col("new_status")).otherwise(F.col("status")),
-                )
-                .withColumn(
-                    "error_message",
-                    F.when(hit, F.col("new_error")).otherwise(
-                        F.col("error_message")
+            state = pa.concat_tables(
+                [
+                    active.select(["s3_key", "run_id"]).filter(
+                        pc.is_in(active["s3_key"], value_set=keys)
                     ),
-                )
-                .withColumn(
-                    "last_updated_at",
-                    F.when(hit, F.current_timestamp()).otherwise(
-                        F.col("last_updated_at")
-                    ),
-                )
-                .withColumn(
-                    "run_id",
-                    F.when(hit, F.lit(run_id)).otherwise(F.col("run_id")),
-                )
-                .drop("new_status", "new_error")
+                    touched,
+                ]
             )
-
-        self._route_update(
-            updates,
-            transform,
-            fence_run_id,
-            may_move,
-            batch_terminal_bound=batch_terminal_bound,
-            key_bounds=key_bounds,
+            fenced_out = state.filter(
+                pc.invert(_carries(state, fence_run_id))
+            )["s3_key"].to_pylist()
+            touched = touched.filter(_carries(touched, fence_run_id))
+        move = functools.partial(
+            _transition,
+            keys=keys,
+            statuses=statuses,
+            errors=errors,
+            now=_utc_now(),
+            run_id=run_id,
+            increment_retry=increment_retry,
+            fence_run_id=fence_run_id,
         )
+        if touched.num_rows:  # a terminal row transitions: full compaction
+            self._compact(move, active, segs)
+        else:
+            self._commit(move(active), segs)
         return fenced_out
 
     def owned_by(self, paths: list[str], run_id: str) -> set[str]:
@@ -1093,18 +975,22 @@ class Ledger:
         commit); used to skip side effects for already-reclaimed files."""
         if not paths:
             return set()
-        keys = local_df(self.spark, [(p,) for p in paths], "s3_key string")
-        return {
-            r.s3_key
-            for r in self.read()
-            .join(F.broadcast(keys), "s3_key", "left_semi")
-            .filter(F.col("run_id") == F.lit(run_id))
-            .select("s3_key")
-            .collect()
-        }
+        rows = self._lookup(_key_array(paths), ["s3_key", "run_id"])
+        return set(rows.filter(_carries(rows, run_id))["s3_key"].to_pylist())
+
+    def keys_with_status(self, keys: list[str], status: str) -> list[str]:
+        """The subset of ``keys`` whose ledger row has ``status``. Read-only
+        point lookup (no mutex, no Spark job)."""
+        if not keys:
+            return []
+        rows = self._lookup(_key_array(keys), ["s3_key", "status"])
+        return rows.filter(pc.equal(rows["status"], status))["s3_key"].to_pylist()
 
     def counts(self) -> dict[str, int]:
-        return {
-            r["status"]: r["n"]
-            for r in self.read().groupBy("status").agg(F.count("*").alias("n")).collect()
-        }
+        """Rows per status, accumulated batch by batch."""
+        active, segs = self._current_parts()
+        out: dict[str, int] = {}
+        for t in self._batches(([active] if active else []) + segs, ["status"]):
+            for r in pc.value_counts(t["status"]).to_pylist():
+                out[r["values"]] = out.get(r["values"], 0) + r["counts"]
+        return out

@@ -115,12 +115,12 @@ def local_df(spark: SparkSession, rows: list, schema):
     ``createDataFrame(list_of_tuples)`` slices the list into
     defaultParallelism pickled-RDD partitions, and EVERY downstream task
     that evaluates one pays a Python-worker round-trip — a ``coalesce(1)``
-    consumer (the ledger snapshot writer) evaluates all 32 serially,
-    ~5 s of pure worker launches for a 256-row table. Routing through
-    pandas hands Spark one Arrow batch that executes JVM-side in any
-    number of downstream tasks for free. Only for bounded metadata frames
-    (ledger keys, discovery listings, broadcast dims); real data stays in
-    distributed scans."""
+    consumer evaluates all 32 serially, ~5 s of pure worker launches for a
+    256-row table. Routing through pandas hands Spark one Arrow batch that
+    executes JVM-side in any number of downstream tasks for free. Only for
+    bounded metadata frames (discovery listings, broadcast dims); real data
+    stays in distributed scans, and the ledger's own keys never become a
+    DataFrame (its read-modify-write runs on the driver in Arrow)."""
     if not rows:
         # zero-partition RDD: downstream evaluation schedules no tasks at
         # all (the pandas/Arrow path falls back to pickled slices on empty).
