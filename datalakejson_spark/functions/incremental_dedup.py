@@ -7,15 +7,18 @@ The scale-correct pattern is an *index + delta* loop:
    per batch: the exact-hash index (distinct ``md5(text)``, 32 bytes/doc)
    and the LSH band index (``(doc_id, band, band_hash)``,
    NUM_BANDS rows/doc — the same table ``dedup.band_table`` builds).
-2. Each new batch is audited with two semi-join probes: exact collisions on
-   the content hash, near collisions on ``(band, band_hash)`` buckets. Both
-   joins key on fixed-width hashes — document text never shuffles, the probe
-   cost is O(delta + collisions) regardless of corpus size, and both are
-   plain shuffle joins that AQE/bloom-pruning accelerate for a small delta
-   against a huge index.
-3. Survivors' hashes/bands are appended to the indexes (one pipeline, reused
-   from the audit via the shared band table) — the loop invariant that keeps
-   batch N+1 as cheap as batch N.
+2. Each new batch is decided on the driver from two Spark actions. The
+   first runs the minhash pipeline over the batch and collects every
+   document's content hash and ``(band, band_hash)`` rows — bounded by
+   batch x (NUM_BANDS + 1) fixed-width keys; the within-batch dedup is set
+   logic over them. The second scans only the index files whose key range
+   can hold a survivor's key and collects the distinct colliding keys:
+   exact collisions on the content hash, near collisions on the bucket.
+   Document text never leaves the executors, and the probe cost is
+   O(delta keys x rows per file) regardless of corpus size.
+3. Survivors' hashes/bands — already on the driver — are appended to the
+   indexes as one Arrow-written file per lane: the loop invariant that
+   keeps batch N+1 as cheap as batch N.
 
 This is the row-level generalization of the reference's file-level
 idempotency loop (``ON CONFLICT DO NOTHING`` per file, sudo_code.txt:90;
@@ -40,6 +43,7 @@ from datalakejson_spark.functions.dedup import band_table, minhash_signatures
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
 from datalakejson_spark.registry import register
+from datalakejson_spark.session import local_df
 from datalakejson_spark.sources.tables import load_table
 
 _LOG = logging.getLogger(__name__)
@@ -162,7 +166,9 @@ def _read_index_pair_pruned(
     eager O(files) listing per subdir per batch, exactly the term the
     pruning exists to avoid): both subdirs absent -> bootstrap empty;
     one absent -> raise half-present; present but emptied of parquet
-    files -> raise rather than audit blind."""
+    files -> raise rather than audit blind. The frames are read with the
+    lanes' declared schemas, so building them runs no schema-inference
+    job; a corrupt footer raises in the first action that scans it."""
     stats: dict[str, tuple[int, int]] = {}
     out: dict[str, DataFrame] = {}
     keys = {"hashes": hash_keys, "bands": band_keys}
@@ -174,8 +180,8 @@ def _read_index_pair_pruned(
     exists = {sub: os.path.isdir(p) for sub, p in paths.items()}
     if not any(exists.values()):  # first batch: bootstrap empty pair
         return (
-            spark.createDataFrame([], schemas["hashes"]),
-            spark.createDataFrame([], schemas["bands"]),
+            local_df(spark, [], schemas["hashes"]),
+            local_df(spark, [], schemas["bands"]),
             {sub: (0, 0) for sub in _INDEX_SUBDIRS},
         )
     if not all(exists.values()):
@@ -203,11 +209,11 @@ def _read_index_pair_pruned(
             # not enough skippable to beat the explicit-list read's
             # per-root listing cost — plain directory read
             stats[sub] = (total, total)
-            out[sub] = spark.read.parquet(live)
+            out[sub] = spark.read.schema(schemas[sub]).parquet(live)
         elif not selected:
-            out[sub] = spark.createDataFrame([], schemas[sub])
+            out[sub] = local_df(spark, [], schemas[sub])
         else:
-            out[sub] = spark.read.parquet(
+            out[sub] = spark.read.schema(schemas[sub]).parquet(
                 *(os.path.join(live, n) for n in selected)
             )
     return out["hashes"], out["bands"], stats
@@ -1794,10 +1800,9 @@ def dedup_audit(
     ``(id, is_exact_dup, is_near_dup, kept)``.
 
     ``precomputed_bands``: the delta's band table, if the caller already
-    materialized it (ingest_batch_dedup does, for driver-side probe
-    planning) — passing it avoids recomputing the minhash pipeline inside
-    the audit plan. Must be exactly ``band_table(minhash_signatures(delta,
-    text_col, id_col), id_col)``.
+    materialized it — passing it avoids recomputing the minhash pipeline
+    inside the audit plan. Must be exactly
+    ``band_table(minhash_signatures(delta, text_col, id_col), id_col)``.
 
     ``is_exact_dup``: the text hash already exists in the corpus.
     ``is_near_dup``: at least one LSH band collides with a corpus document
@@ -1876,26 +1881,6 @@ def dedup_audit(
             .alias("kept"),
         )
     )
-
-
-def dedup_within_batch(
-    delta: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Intra-batch dedup: the corpus probes (dedup_audit) compare the delta
-    against the INDEXES only, so two copies arriving in the SAME batch both
-    pass a corpus-only audit. This stage removes them first — exact dups by
-    content hash (keep lowest id), near dups by LSH candidate pairs over the
-    batch itself (drop the higher id of each colliding pair). Batch-sized
-    work: the self-join is over one micro-batch, never the corpus."""
-    from datalakejson_spark.functions.dedup import (
-        keep_first_distinct,
-        lsh_candidate_pairs,
-    )
-
-    uniq = keep_first_distinct(delta, text_col, id_col)
-    pairs = lsh_candidate_pairs(minhash_signatures(uniq, text_col, id_col), id_col)
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return uniq.join(losers, id_col, "left_anti")
 
 
 COMPACT_TARGET_ROWS_PER_FILE = 1_000_000
@@ -1979,6 +1964,126 @@ def _needs_compaction(
 COMPACT_MAX_RUNS = 8
 
 
+def _batch_rows(src: DataFrame, id_col: str, text_col: str):
+    """Every document's ``(id, md5(text))`` row and its NUM_BANDS
+    ``(id, band, band_hash)`` rows, collected in ONE Spark action — at most
+    batch x (NUM_BANDS + 1) rows of fixed-width keys, the same bound as the
+    key sets the probe needs anyway. Returns ``(docs, bands)`` Arrow tables
+    with the id cast to bigint, the type of the persisted bands lane."""
+    import pyarrow.compute as pc
+
+    # Spread the micro-batch across the cluster before the per-row
+    # pipeline: a micro-batch is typically 1-2 partitions,
+    # which would run the whole shingle pipeline on one core; it stays
+    # micro at any corpus scale, so the exchange is O(batch) by contract
+    # (measured 1.5x on the pipeline job). Both branches read the one
+    # exchange (ReuseExchange), and the minhash aggregate needs no second
+    # shuffle: the spread is already hash-partitioned by id.
+    spread = src.repartition(
+        src.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    )
+    doc_rows = spread.select(
+        F.col(id_col).cast("bigint").alias("id"),
+        F.md5(text_col).alias("text_hash"),
+        F.lit(None).cast("int").alias("band"),
+        F.lit(None).cast("string").alias("band_hash"),
+    )
+    band_rows = band_table(minhash_signatures(spread, text_col, id_col), id_col).select(
+        F.col(id_col).cast("bigint").alias("id"),
+        F.lit(None).cast("string").alias("text_hash"),
+        "band",
+        "band_hash",
+    )
+    rows = doc_rows.unionByName(band_rows).toArrow()
+    is_doc = pc.is_null(rows["band"])
+    return rows.filter(is_doc), rows.filter(pc.invert(is_doc))
+
+
+def _within_batch_survivors(docs, bands) -> tuple[set, dict]:
+    """Within-batch dedup on the driver, the same verdicts as the Spark
+    formulas (``keep_first_distinct``, then dropping every ``doc_b`` of
+    ``lsh_candidate_pairs``): of each group of exact copies the lowest id
+    survives — NULL text is one group, as in the window's ``partitionBy``
+    — and in every ``(band, band_hash)`` bucket of those unique documents
+    each id above the bucket minimum is a near-duplicate loser (the
+    self-join's ``a.id < b.id`` pairs; a NULL band_hash joins nothing).
+
+    Returns the surviving ``(id, text_hash)`` rows and each survivor's
+    ``(band, band_hash)`` keys."""
+    first: dict = {}
+    for i, h in zip(docs["id"].to_pylist(), docs["text_hash"].to_pylist()):
+        if h not in first or i < first[h]:
+            first[h] = i
+    uniq = {(i, h) for h, i in first.items()}
+    uniq_ids = {i for i, _h in uniq}
+    buckets: dict[tuple, list] = {}
+    for i, b, bh in zip(
+        bands["id"].to_pylist(),
+        bands["band"].to_pylist(),
+        bands["band_hash"].to_pylist(),
+    ):
+        if i in uniq_ids and bh is not None:
+            buckets.setdefault((b, bh), []).append(i)
+    losers: set = set()
+    keys: dict = {}
+    for key, ids in buckets.items():
+        low = min(ids)
+        losers.update(i for i in ids if i != low)
+        keys.setdefault(low, []).append(key)
+    survivors = {(i, h) for i, h in uniq if i not in losers}
+    return survivors, {i: keys.get(i, []) for i, _h in survivors}
+
+
+def _probe_hits(hashes: DataFrame, bands: DataFrame, hash_keys, band_keys):
+    """The distinct index keys that collide with the survivors' keys, in ONE
+    Spark action over the (range-pruned) index scan: ``(exact hashes,
+    {(band, band_hash)})``. Each lane streams through a semi-join against
+    a broadcast table of the survivors' keys — dedup_audit's probe
+    orientation, so the index is never shuffled — and the distinct bounds
+    the collect by the batch's key count even when a hot bucket holds
+    millions of corpus rows. (An ``IN`` list filter instead is pushed down
+    to the parquet reader: 10-14 s for 4000 band keys over 977 files,
+    against 1.7-2.4 s for the semi-join, measured at a 10^6-doc index.)"""
+    spark = hashes.sparkSession
+    hit_hashes = hashes.join(
+        F.broadcast(local_df(spark, [(k,) for k in hash_keys], "text_hash string")),
+        "text_hash",
+        "leftsemi",
+    ).select(F.lit(None).cast("int").alias("band"), F.col("text_hash").alias("key"))
+    hit_buckets = (
+        bands.select(*BAND_KEY)
+        .join(
+            F.broadcast(local_df(spark, band_keys, "band int, band_hash string")),
+            BAND_KEY,
+            "leftsemi",
+        )
+        .select("band", F.col("band_hash").alias("key"))
+    )
+    rows = hit_hashes.unionByName(hit_buckets).distinct().toArrow()
+    exact, near = set(), set()
+    for b, k in zip(rows["band"].to_pylist(), rows["key"].to_pylist()):
+        if b is None:
+            exact.add(k)
+        else:
+            near.add((b, k))
+    return exact, near
+
+
+def _write_stage_lane(stage: str, sub: str, table) -> None:
+    """Write one lane's append as ONE Spark-named part file
+    (``part-00000-<uuid>-c000.snappy.parquet``): the UUID is the write
+    generation :func:`_derive_runs` groups runs by, and a batch that keeps
+    nothing still writes its (empty) file, as a Spark write of an empty
+    frame does — the live dir must never be left without parquet files."""
+    import pyarrow.parquet as pq
+
+    lane = os.path.join(stage, sub)
+    os.makedirs(lane, exist_ok=True)
+    pq.write_table(
+        table, os.path.join(lane, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet")
+    )
+
+
 def ingest_batch_dedup(
     spark: SparkSession,
     delta: DataFrame,
@@ -1986,7 +2091,6 @@ def ingest_batch_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     on_kept=None,
-    broadcast_delta: bool = True,
     compact_max_runs: int | None = COMPACT_MAX_RUNS,
     compact_target_rows_per_file: int | None = None,
 ) -> DataFrame:
@@ -1994,6 +2098,9 @@ def ingest_batch_dedup(
     ``index_dir`` (``hashes/``, ``bands/``): dedup within the batch, audit
     the remainder against the indexes, deliver the survivors, THEN append
     their hashes/bands. Returns the surviving rows (full columns).
+
+    ``delta`` is one micro-batch: its per-document keys are collected to
+    the driver. Bulk backfills go through :func:`rebuild_index`.
 
     ``on_kept``: optional callable invoked with the survivor DataFrame
     BETWEEN the audit decision and the index appends — the downstream
@@ -2006,11 +2113,11 @@ def ingest_batch_dedup(
     make the replayed batch collide with its OWN index rows, drop every
     document, and lose the batch permanently.
 
-    First call bootstraps empty indexes; ONLY a missing index path
-    (errorClass PATH_NOT_FOUND, on both paths) falls back to the bootstrap —
-    a half-present pair, an emptied dir, or any other read failure raises,
-    because auditing against accidentally-empty indexes would silently
-    re-ingest the whole corpus as "novel" (see _read_index_pair).
+    First call bootstraps empty indexes; ONLY a missing index pair falls
+    back to the bootstrap — a half-present pair, an emptied dir, or any
+    other read failure raises, because auditing against accidentally-empty
+    indexes would silently re-ingest the whole corpus as "novel" (see
+    _read_index_pair_pruned).
 
     The two index appends commit atomically-in-effect: both deltas are
     staged under ``{index_dir}/_staging/<token>/`` with a ``_COMMITTED``
@@ -2018,15 +2125,19 @@ def ingest_batch_dedup(
     call first rolls forward any committed-but-unpublished stage from a
     crashed predecessor, so the hash and band indexes can never drift apart.
 
-    Probe planning (round 11): in the micro-batch posture
-    (``broadcast_delta=True``) the delta's distinct text-hash and band-hash
-    key sets — already driver-bounded, they are the broadcast sides — are
-    collected once and used to range-prune the index READ via the
-    ``_RANGES.json``/footer sidecars, so each audit scans only the index
-    files whose key range can contain a delta key (sound: a skipped file
-    provably holds no collision). The bulk posture skips pruning — a
-    corpus-proportional delta's key set is not driver-collectable, and it
-    touches every file anyway.
+    The decision runs on the driver; Spark keeps only the two steps whose
+    cost grows with data. One action runs the minhash pipeline over the
+    batch and collects every document's ``(id, md5(text))`` and band rows
+    (:func:`_batch_rows`); the within-batch dedup is then set logic on
+    those rows (:func:`_within_batch_survivors`). The survivors' sorted key
+    sets range-prune the index read via the ``_RANGES.json``/footer
+    sidecars (sound: a skipped file provably holds no collision), and one
+    more action collects the distinct index keys they collide with
+    (:func:`_probe_hits`) — the exact, near and kept verdicts are lookups
+    in that set. The survivors' index rows are already on the driver, so
+    both lanes are written with pyarrow, one file per lane per batch. The
+    returned frame is the checkpointed batch filtered to the kept ids: it
+    never reads the index, so the appends cannot change it afterwards.
 
     Compaction is loop POLICY, not a manual facade call (round 11): after
     the appends publish, if either live subdir holds more than
@@ -2044,145 +2155,88 @@ def ingest_batch_dedup(
     stays old-layout-or-harmless-duplication. Pass ``None`` to disable
     (bulk backfills that compact once at the end with ``max_runs=1``).
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from datalakejson_spark.functions.dedup import keep_first_distinct
+
     _publish_staged(index_dir)  # roll forward a crashed predecessor first
     _check_lane_meta(index_dir)
-    delta_bands = None
-    if broadcast_delta:
-        # Micro-batch posture (r16, guide §1.2): the shingle→md5→minhash
-        # pipeline is the batch's dominant compute, and the r15 shape ran it
-        # TWICE — once inside dedup_within_batch (the within-batch LSH
-        # self-join) and again to build the survivors' band table. It now
-        # runs ONCE: the full batch's band table is materialized first and
-        # reused for (a) the within-batch candidate pairs (the identical
-        # self-join lsh_candidate_pairs performs, over the checkpointed
-        # table), (b) the corpus near-dup probe, (c) the survivors' index
-        # append, and (d) the driver-side probe keys. Band rows are
-        # per-document and deterministic, so filtering the batch table to
-        # within-batch survivors yields exactly band_table(minhash_signatures
-        # (survivors)) — the same argument the survivors' append already
-        # relied on. Probe keys are collected in ONE job (tagged union of
-        # the two checkpointed key sets) instead of two; collecting them is
-        # bounded by the delta, the same order as the broadcast that ships
-        # them to every executor anyway.
-        from datalakejson_spark.functions.dedup import keep_first_distinct
-
-        uniq = keep_first_distinct(delta, text_col, id_col).localCheckpoint(
-            eager=False
-        )
-        # Spread the micro-batch across the cluster before the per-row
-        # pipeline (guide §2.5): the checkpointed uniq frame is typically
-        # 1-2 post-AQE partitions (a micro-batch), which would run the
-        # whole shingle pipeline on one core; a micro-batch stays micro at
-        # any corpus scale, so the exchange is O(batch) by contract
-        # (measured 1.5× on the pipeline job; bit-identical — min/band
-        # aggregates are per-document).
-        spread = uniq.repartition(
-            delta.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-        )
-        batch_bands = band_table(
-            minhash_signatures(spread, text_col, id_col), id_col
-        ).localCheckpoint(eager=True)
-        band_a, band_b = batch_bands.alias("a"), batch_bands.alias("b")
-        losers = (
-            band_a.join(
-                band_b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(F.col(f"b.{id_col}").alias(id_col))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # One materialization of the within-batch survivor set: it feeds the
-        # audit (twice), the kept join, and the key collection — lazy, so it
-        # materializes inside the key-collect job below (no separate job).
-        batch_uniq = uniq.join(losers, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
-        delta_bands = batch_bands.join(losers, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
-        keys = (
-            batch_uniq.select(F.md5(text_col).alias("k"), F.lit(0).alias("t"))
-            .distinct()
-            .unionAll(
-                delta_bands.select(F.col("band_hash").alias("k"), F.lit(1).alias("t"))
-                .distinct()
-            )
-            .collect()
-        )
-        hash_keys = [r.k for r in keys if r.t == 0]
-        band_keys = [r.k for r in keys if r.t == 1]
-    else:
-        # Bulk posture: a corpus-proportional delta's band table is too big
-        # to pin with localCheckpoint; keep the single-plan within-batch
-        # dedup (the pipeline recompute is amortized by the backfill's own
-        # scale, and the audit skips pruning anyway).
-        batch_uniq = dedup_within_batch(delta, id_col, text_col).localCheckpoint(
-            eager=True
-        )
-    # The audit reads a SNAPSHOT of the live index files; a CONCURRENT
+    src = delta.localCheckpoint(eager=False)
+    docs, bands = _batch_rows(src, id_col, text_col)
+    if docs["id"].null_count:
+        raise ValueError(f"dedup batch has documents with a NULL {id_col}")
+    survivors, survivor_bands = _within_batch_survivors(docs, bands)
+    hash_keys = sorted({h for _i, h in survivors if h is not None})
+    band_keys = sorted({k for ks in survivor_bands.values() for k in ks})
+    # The probe reads a SNAPSHOT of the live index files; a CONCURRENT
     # maintenance publish (compaction/rebuild on another runner) may delete
     # a subsumed file mid-job, failing the read with a missing-file error.
-    # The audit is pure (no writes happen until after the survivor set is
-    # checkpointed below), so the fix is a bounded re-plan from a fresh
-    # listing — the publish is driver-side file moves, so a second snapshot
-    # is consistent with overwhelming probability (round 12).
+    # The probe is pure (nothing is written before it succeeds), so the fix
+    # is a bounded re-plan from a fresh listing — the publish is driver-side
+    # file moves, so a second snapshot is consistent with overwhelming
+    # probability (round 12).
     for attempt in range(3):
         try:
-            if broadcast_delta:
-                corpus_hashes, corpus_bands, _ = _read_index_pair_pruned(
-                    spark, index_dir, id_col, hash_keys, band_keys
-                )
-            else:
-                corpus_hashes, corpus_bands = _read_index_pair(
-                    spark, index_dir, id_col
-                )
-            audit = dedup_audit(
-                batch_uniq, corpus_hashes, corpus_bands, id_col, text_col,
-                broadcast_delta=broadcast_delta,  # False for bulk backfills
-                precomputed_bands=delta_bands,
+            corpus_hashes, corpus_bands, stats = _read_index_pair_pruned(
+                spark, index_dir, id_col, hash_keys, [bh for _b, bh in band_keys]
             )
-            # localCheckpoint (eager), NOT persist: the survivor set feeds
-            # three consumers (on_kept + two index appends), and the appends
-            # write to the very paths the audit reads. A persisted plan is
-            # recomputed by Spark's CacheManager when a write refreshes
-            # those paths (recacheByPath), which would re-run the audit
-            # against an index that already contains the survivors' own
-            # hashes — every survivor becomes a "duplicate" of itself and
-            # the batch collapses to empty. Checkpointing materializes the
-            # decision first and cuts the lineage, so the subsequent appends
-            # cannot retroactively change it.
-            kept = batch_uniq.join(
-                audit.filter("kept").select(id_col), id_col, "leftsemi"
-            ).localCheckpoint(eager=True)
+            if any(scanned for scanned, _total in stats.values()):
+                exact_hits, near_hits = _probe_hits(
+                    corpus_hashes, corpus_bands, hash_keys, band_keys
+                )
+            else:  # bootstrap, or pruning skipped every file
+                exact_hits, near_hits = set(), set()
             break
         except Exception as exc:  # noqa: BLE001 — retried narrowly below
             if attempt == 2 or not _is_missing_file_error(exc):
                 raise
+    kept_rows = sorted(
+        (
+            (i, h)
+            for i, h in survivors
+            if h not in exact_hits
+            and not any(k in near_hits for k in survivor_bands[i])
+        ),
+        key=lambda r: r[0],
+    )
+    kept_ids = [i for i, _h in kept_rows]
+    doc_ids = docs["id"].to_pylist()
+    # A repeated id is a document delivered twice in one batch: only the
+    # window formula delivers one row per copy group.
+    uniq_src = src if len(set(doc_ids)) == len(doc_ids) else keep_first_distinct(
+        src, text_col, id_col
+    )
+    # one parsed IN list (Column.isin pays a py4j trip per literal), which
+    # the optimizer turns into a hash-set lookup
+    kept = uniq_src.filter(
+        F.expr(f"`{id_col}` IN ({', '.join(map(str, kept_ids))})")
+        if kept_ids
+        else F.lit(False)
+    )
     if on_kept is not None:
         on_kept(kept)
     stage = os.path.join(index_dir, _STAGING, uuid.uuid4().hex)
-    # Micro-posture appends coalesce to ONE file per lane per batch (guide
-    # §6 small files): the batch is driver-bounded by contract, and the r16
-    # spread of the batch pipeline would otherwise fan each tiny append out
-    # to defaultParallelism files — 32× the footers every future pruned
-    # audit has to consider. Bulk backfills keep the planner's layout.
-    fan_in = (lambda df: df.coalesce(1)) if broadcast_delta else (lambda df: df)
-    fan_in(exact_hash_index(kept, text_col)).write.mode("overwrite").parquet(
-        os.path.join(stage, "hashes")
+    # exact_hash_index(kept): the survivors' text hashes are already
+    # distinct (one survivor per copy group), NULL text included
+    _write_stage_lane(
+        stage,
+        "hashes",
+        pa.table({"text_hash": pa.array([h for _i, h in kept_rows], pa.string())}),
     )
     fire("dedup:after_hash_stage")  # half-staged pair: must never publish
-    kept_bands = (
-        # Survivors' bands = the already-materialized delta bands filtered
-        # to survivor ids (identical rows to recomputing the minhash
-        # pipeline over ``kept`` — band_table is deterministic per doc).
-        delta_bands.join(kept.select(id_col), id_col, "leftsemi")
-        if delta_bands is not None
-        else band_table(minhash_signatures(kept, text_col, id_col), id_col)
+    kept_bands = bands.filter(pc.is_in(bands["id"], pa.array(kept_ids, pa.int64())))
+    _write_stage_lane(
+        stage,
+        "bands",
+        pa.table(
+            {
+                id_col: kept_bands["id"],
+                "band": kept_bands["band"].cast(pa.int32()),
+                "band_hash": kept_bands["band_hash"].cast(pa.string()),
+            }
+        ),
     )
-    fan_in(kept_bands).write.mode("overwrite").parquet(os.path.join(stage, "bands"))
     fire("dedup:before_commit_marker")  # both staged, marker missing
     with open(os.path.join(stage, "_COMMITTED"), "w") as marker:
         marker.write("ok")

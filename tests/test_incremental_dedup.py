@@ -1751,3 +1751,145 @@ def test_stats_caches_invalidate_on_publish(spark, tmp_path):
     assert set(d) == set(inc._live_files(live))
     ranges = inc._file_ranges(live, "text_hash")
     assert inc._ranges_disjoint(ranges)
+
+
+# ---------------------------------------------------------------------------
+# The micro-batch decision runs on the driver: one pipeline collect, one
+# pruned probe, Arrow stage writes.
+# ---------------------------------------------------------------------------
+def _jobs(spark, label, fn):
+    """(fn(), number of Spark jobs it ran), read from statusTracker under
+    its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+
+def test_micro_batch_job_budget(spark, tmp_path):
+    """A steady-state micro-batch (index present, no compaction triggered)
+    runs only the pipeline collect and the pruned probe in Spark — the
+    within-batch dedup, the verdicts and both stage writes are driver
+    work, and the returned frame stays lazy."""
+    idx = str(tmp_path / "idx")
+    ingest_batch_dedup(
+        spark, _docs(spark, [(k, _distinct_text(k)) for k in range(12)]), idx
+    )
+    delta = _docs(
+        spark,
+        [(100, _distinct_text(3)), (101, _distinct_text(101)), (102, _distinct_text(101))],
+    )
+    kept, jobs = _jobs(
+        spark, "dedup-micro-batch", lambda: ingest_batch_dedup(spark, delta, idx)
+    )
+    assert jobs <= 6, jobs
+    assert [r.doc_id for r in kept.collect()] == [101]
+
+
+def _near_copy(text: str) -> str:
+    """``text`` with its last token replaced: 11 of 13 shingles shared."""
+    return text.rsplit(" ", 1)[0] + " wchanged0"
+
+
+def test_driver_decision_matches_spark_formulas(spark, tmp_path):
+    """The driver-side decision reproduces the Spark formulas it replaced:
+    within-batch keep_first_distinct (NULL text is one group, a document
+    repeated in the batch is delivered once) plus the lsh_candidate_pairs
+    losers, then the corpus audit (dedup_audit). The
+    published index rows equal exact_hash_index/band_table over the kept
+    docs row for row, and the new files are readable by Spark with the
+    declared schemas and form one range-correct run per lane."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from datalakejson_spark.functions import incremental_dedup as inc
+    from datalakejson_spark.functions.dedup import (
+        keep_first_distinct,
+        lsh_candidate_pairs,
+    )
+
+    idx = str(tmp_path / "idx")
+    ingest_batch_dedup(
+        spark,
+        _docs(spark, [(1, _distinct_text(1)), (2, BASE), (3, OTHER)]),
+        idx,
+    )
+    before = {sub: set(_parquet_files(idx, sub)) for sub in ("hashes", "bands")}
+    corpus_hashes, corpus_bands = inc._read_index_pair(spark, idx, "doc_id")
+    corpus_hashes = corpus_hashes.localCheckpoint()
+    corpus_bands = corpus_bands.localCheckpoint()
+    batch = _docs(
+        spark,
+        [
+            (10, _distinct_text(1)),  # corpus exact collision
+            (11, NEAR),  # corpus near collision (with BASE)
+            (12, _distinct_text(50)),
+            (13, _distinct_text(50)),  # within-batch exact copy of 12
+            (14, _near_copy(_distinct_text(50))),  # within-batch near copy of 12
+            (15, _distinct_text(51)),
+            (15, _distinct_text(51)),  # one document delivered twice
+            (20, None),
+            (21, None),  # within-batch exact copy of 20: NULL text is one group
+        ],
+    )
+
+    # the Spark formulas, inlined
+    uniq = keep_first_distinct(batch)
+    losers = (
+        lsh_candidate_pairs(minhash_signatures(uniq))
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
+    batch_uniq = uniq.join(losers, "doc_id", "left_anti")
+    audit = dedup_audit(batch_uniq, corpus_hashes, corpus_bands)
+    want_ids = {r.doc_id for r in audit.filter("kept").collect()}
+    assert want_ids == {12, 15, 20}  # the batch exercises every verdict
+    ref_kept = batch_uniq.join(audit.filter("kept").select("doc_id"), "doc_id", "leftsemi")
+
+    kept = ingest_batch_dedup(spark, batch, idx)
+    assert sorted(r.doc_id for r in kept.collect()) == sorted(want_ids)  # one row each
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.collect()),
+            key=lambda t: tuple((v is None, v) for v in t),
+        )
+
+    new = {
+        sub: sorted(set(_parquet_files(idx, sub)) - before[sub])
+        for sub in ("hashes", "bands")
+    }
+    assert all(len(files) == 1 for files in new.values()), new
+    schemas = {
+        "hashes": "text_hash string",
+        "bands": "doc_id bigint, band int, band_hash string",
+    }
+    read = {
+        sub: spark.read.schema(schemas[sub]).parquet(os.path.join(idx, sub, new[sub][0]))
+        for sub in new
+    }
+    want_hashes = rows(exact_hash_index(ref_kept))
+    assert None in [h for (h,) in want_hashes]  # the kept NULL-text doc
+    assert rows(read["hashes"]) == want_hashes
+    assert rows(read["bands"]) == rows(band_table(minhash_signatures(ref_kept)))
+
+    for sub, key in inc._PRUNE_KEY.items():
+        path = os.path.join(idx, sub, new[sub][0])
+        assert inc._derive_runs(new[sub]) == [new[sub]]
+        values = [v for v in pq.read_table(path).column(key).to_pylist() if v]
+        rng, n = inc._footer_stats(path, key)
+        assert rng == (min(values), max(values))
+        assert n == read[sub].count()
+
+
+def test_null_id_batch_raises(spark, tmp_path):
+    """A document without an id cannot be delivered or indexed: the batch
+    fails loudly instead of dropping it."""
+    with pytest.raises(ValueError, match="NULL doc_id"):
+        ingest_batch_dedup(
+            spark, _docs(spark, [(None, BASE), (2, OTHER)]), str(tmp_path / "idx")
+        )
